@@ -3,12 +3,13 @@
 Three families, split by where they execute:
 
 - :mod:`gipspark.functions.text` — HTML text extraction + geotagging as
-  vectorized pandas/Arrow UDFs (regex-heavy, Python-side by necessity),
+  vectorized pandas kernels (regex-heavy, Python-side by necessity; the
+  enrich pass runs them in one fused ``mapInPandas``),
   plus JVM-side text-analysis Columns (token counts, quality, lang-id,
   fingerprints) that never leave whole-stage codegen.
 - :mod:`gipspark.functions.cells` — S2/H3 cell indexing pandas UDFs over
-  the vendored NumPy kernels, and the JVM-side GIPS-style graticule
-  tile id.
+  the vendored NumPy kernels, and the JVM-side S2 parent and GIPS-style
+  graticule tile id.
 - :mod:`gipspark.functions.vectors` — embedding similarity expressions
   (dot/cosine) built from higher-order functions, JVM-side.
 
@@ -27,9 +28,7 @@ from gipspark.functions.cells import (  # noqa: F401
 )
 from gipspark.functions.text import (  # noqa: F401
     doc_fingerprint,
-    extract_text_udf,
     extract_text_py,
-    geotag_udf,
     lang_id,
     quality_score,
     token_count,

@@ -67,13 +67,16 @@ def h3_cell(lat: Column, lon: Column, res: int = 7) -> Column:
 
 
 def s2_parent(cell: Column, level: int) -> Column:
-    """Ancestor S2 cell at coarser ``level`` (hierarchy rollup)."""
-
-    @pandas_udf(LongType())
-    def _par(c: pd.Series) -> pd.Series:
-        return pd.Series(s2.parent(c.to_numpy(np.int64), level))
-
-    return _par(cell)
+    """Ancestor S2 cell at coarser ``level`` (hierarchy rollup): the bit
+    trick ``(cell & ~(lsb-1)) | lsb`` of :func:`gipspark.geo.s2.parent`
+    as pure JVM bitwise arithmetic, so it stays inside whole-stage
+    codegen. Python's ``~(lsb-1)`` is already the signed-int64 mask, as
+    LongType needs for face-5 ids, which are negative. Null in, null out.
+    """
+    lsb = s2.lsb_for_level(level)
+    return cell.bitwiseAND(F.lit(~(lsb - 1)).cast("long")).bitwiseOR(
+        F.lit(lsb).cast("long")
+    )
 
 
 def kring(cell: Column, level: int, k: int = 1) -> Column:

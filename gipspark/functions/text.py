@@ -20,8 +20,6 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 # ---------------------------------------------------------------------------
 # extract_text — the frozen spec
@@ -84,11 +82,6 @@ def extract_text_py(html: bytes | str) -> str:
     return extract_text_series(pd.Series([html])).iloc[0]
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
-
-
 # ---------------------------------------------------------------------------
 # geotag — the Common-Crawl geocoding signal
 # ---------------------------------------------------------------------------
@@ -112,11 +105,6 @@ def geotag_frame(html: pd.Series) -> pd.DataFrame:
             "lon": pd.to_numeric(ext[1], errors="coerce"),
         }
     )
-
-
-@pandas_udf(StructType([StructField("lat", DoubleType()), StructField("lon", DoubleType())]))
-def geotag_udf(html: pd.Series) -> pd.DataFrame:
-    return geotag_frame(html)
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ explode), also pure codegen.
 
 Use case (SURVEY.md §2.3): polygon covers stored compact are ~7×
 smaller to broadcast; probe sides explode their cell's ancestor chain
-(operators/pip.py parent_expr does the S2 analogue) to match any
+(functions/cells.py s2_parent does the S2 analogue) to match any
 cover level.
 """
 

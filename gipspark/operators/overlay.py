@@ -22,9 +22,8 @@ skeleton as the PIP join:
    partial overlap; boundary-touching degeneracies (collinear edges,
    vertex-on-edge) follow the strict rule and are excluded — the DuckDB
    oracle implements the textually-identical predicate, so both sides
-   agree bit-for-bit. Divide-by-zero in the ray cast yields NULL under
-   Spark's non-ANSI Divide and the straddle gate short-circuits
-   `false AND NULL` to false (see operators/pip.py refine note).
+   agree bit-for-bit. The ray cast is operators.pip.ray_cast_inside
+   (its docstring covers the straddle gate and non-ANSI division).
 
 Scale notes: edge arrays ride in the tables (array<struct> columns), so
 the refine is one codegen stage over candidates; |Ea|·|Eb| orientation
@@ -38,10 +37,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gipspark.functions.cells import s2_parent
 from gipspark.geo import pip as pipgeo
-from gipspark.operators.pip import COVER_LEVELS, choose_cover_level, polygon_covers
-
-_EDGES_T = "array<struct<x1:double,y1:double,x2:double,y2:double>>"
+from gipspark.operators.pip import (
+    COVER_LEVELS,
+    EDGES_T,
+    choose_cover_level,
+    edge_rows,
+    polygon_covers,
+    ray_cast_inside,
+)
 
 
 def _side_dfs(
@@ -62,12 +67,7 @@ def _side_dfs(
     shape_rows = [
         (
             int(p["poly_id"]),
-            [
-                (float(x1), float(y1), float(x2), float(y2))
-                for x1, y1, x2, y2 in pipgeo.rings_to_edges(
-                    [np.asarray(r, dtype=np.float64) for r in p["rings"]]
-                )
-            ],
+            edge_rows(p["rings"]),
             float(p["rings"][0][0][0]),
             float(p["rings"][0][0][1]),
         )
@@ -75,21 +75,15 @@ def _side_dfs(
     ]
     shape = spark.createDataFrame(
         shape_rows,
-        f"{prefix}_id long, {prefix}_edges {_EDGES_T}, {prefix}_vx double, {prefix}_vy double",
+        f"{prefix}_id long, {prefix}_edges {EDGES_T}, {prefix}_vx double, {prefix}_vy double",
     )
     return cover, shape
 
 
 def _ancestors(cell):
     """Explode helper: a cover cell plus its ancestors at every
-    quantized level ≤ its own (same parent bit math as pip_join)."""
-    out = [cell]
-    for lvl in COVER_LEVELS[:-1]:
-        lsb = 1 << (2 * (30 - lvl))
-        mask = (~(lsb - 1)) & 0xFFFFFFFFFFFFFFFF
-        if mask >= 1 << 63:
-            mask -= 1 << 64
-        out.append(cell.bitwiseAND(F.lit(mask)).bitwiseOR(F.lit(lsb)))
+    quantized level ≤ its own (functions.cells.s2_parent)."""
+    out = [cell] + [s2_parent(cell, lvl) for lvl in COVER_LEVELS[:-1]]
     return F.array_distinct(F.array(*out))
 
 
@@ -104,20 +98,6 @@ def _proper_cross(ea, eb):
     ob1 = _orient(ea.x1, ea.y1, ea.x2, ea.y2, eb.x1, eb.y1)
     ob2 = _orient(ea.x1, ea.y1, ea.x2, ea.y2, eb.x2, eb.y2)
     return (oa1 * oa2 < 0) & (ob1 * ob2 < 0)
-
-
-def _point_in_edges(vx, vy, edges):
-    crossings = F.aggregate(
-        edges,
-        F.lit(0),
-        lambda acc, e: acc
-        + F.when(
-            ((e.y1 > vy) != (e.y2 > vy))
-            & (vx < (e.x2 - e.x1) * (vy - e.y1) / (e.y2 - e.y1) + e.x1),
-            1,
-        ).otherwise(0),
-    )
-    return crossings % 2 == 1
 
 
 _EDGES_FROM_RINGS = (
@@ -172,6 +152,31 @@ def _poly_cover_df(df: DataFrame, prefix: str) -> DataFrame:
     )
 
 
+def _candidates(a_cover: DataFrame, b_cover: DataFrame) -> DataFrame:
+    """Distinct (a_id, b_id) pairs sharing a normalized cover cell: both
+    covers are exploded onto the quantized level lattice (the coarser
+    side's own level always appears in the finer side's ancestor chain)."""
+    a_norm = a_cover.select(F.explode(_ancestors(F.col("cell"))).alias("cell"), "a_id")
+    b_norm = b_cover.select(F.explode(_ancestors(F.col("cell"))).alias("cell"), "b_id")
+    return a_norm.join(b_norm, "cell").select("a_id", "b_id").distinct()
+
+
+def _intersecting(pairs: DataFrame) -> DataFrame:
+    """Candidate pairs carrying both sides' shape columns → the house
+    rule's three flags, kept where any holds."""
+    scored = pairs.select(
+        "a_id",
+        "b_id",
+        F.exists(
+            F.col("a_edges"),
+            lambda ea: F.exists(F.col("b_edges"), lambda eb: _proper_cross(ea, eb)),
+        ).alias("edge_cross"),
+        ray_cast_inside(F.col("a_vx"), F.col("a_vy"), F.col("b_edges")).alias("a_in_b"),
+        ray_cast_inside(F.col("b_vx"), F.col("b_vy"), F.col("a_edges")).alias("b_in_a"),
+    )
+    return scored.filter(F.col("edge_cross") | F.col("a_in_b") | F.col("b_in_a"))
+
+
 def overlay_join_df(a_polys_df: DataFrame, b_polys_df: DataFrame) -> DataFrame:
     """DataFrame-native overlay join: both polygon sides are tables of
     (poly_id, rings) — the parcels×zones shape where neither side fits
@@ -180,28 +185,12 @@ def overlay_join_df(a_polys_df: DataFrame, b_polys_df: DataFrame) -> DataFrame:
     occupancy), and the refine joins shapes back on poly_id — no
     broadcast anywhere, so both sides scale horizontally. Predicates
     are identical to :func:`overlay_join` (same oracle applies)."""
-    a_norm = _poly_cover_df(a_polys_df, "a").select(
-        F.explode(_ancestors(F.col("cell"))).alias("cell"), "a_id"
-    )
-    b_norm = _poly_cover_df(b_polys_df, "b").select(
-        F.explode(_ancestors(F.col("cell"))).alias("cell"), "b_id"
-    )
-    cand = a_norm.join(b_norm, "cell").select("a_id", "b_id").distinct()
-    scored = (
-        cand.join(_poly_shape_cols(a_polys_df, "a"), "a_id")
-        .join(_poly_shape_cols(b_polys_df, "b"), "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.exists(
-                F.col("a_edges"),
-                lambda ea: F.exists(F.col("b_edges"), lambda eb: _proper_cross(ea, eb)),
-            ).alias("edge_cross"),
-            _point_in_edges(F.col("a_vx"), F.col("a_vy"), F.col("b_edges")).alias("a_in_b"),
-            _point_in_edges(F.col("b_vx"), F.col("b_vy"), F.col("a_edges")).alias("b_in_a"),
+    cand = _candidates(_poly_cover_df(a_polys_df, "a"), _poly_cover_df(b_polys_df, "b"))
+    return _intersecting(
+        cand.join(_poly_shape_cols(a_polys_df, "a"), "a_id").join(
+            _poly_shape_cols(b_polys_df, "b"), "b_id"
         )
     )
-    return scored.filter(F.col("edge_cross") | F.col("a_in_b") | F.col("b_in_a"))
 
 
 def overlay_join(
@@ -211,26 +200,7 @@ def overlay_join(
     b_in_a), one row per pair where any flag holds."""
     a_cover, a_shape = _side_dfs(spark, a_polys, "a")
     b_cover, b_shape = _side_dfs(spark, b_polys, "b")
-
-    # normalize both covers to the quantized level lattice and match on
-    # any shared normalized cell (coarser side's own level always
-    # appears in the finer side's ancestor chain)
-    a_norm = a_cover.select(F.explode(_ancestors(F.col("cell"))).alias("cell"), "a_id")
-    b_norm = b_cover.select(F.explode(_ancestors(F.col("cell"))).alias("cell"), "b_id")
-    cand = a_norm.join(b_norm, "cell").select("a_id", "b_id").distinct()
-
-    scored = (
-        cand.join(F.broadcast(a_shape), "a_id")
-        .join(F.broadcast(b_shape), "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.exists(
-                F.col("a_edges"),
-                lambda ea: F.exists(F.col("b_edges"), lambda eb: _proper_cross(ea, eb)),
-            ).alias("edge_cross"),
-            _point_in_edges(F.col("a_vx"), F.col("a_vy"), F.col("b_edges")).alias("a_in_b"),
-            _point_in_edges(F.col("b_vx"), F.col("b_vy"), F.col("a_edges")).alias("b_in_a"),
-        )
+    cand = _candidates(a_cover, b_cover)
+    return _intersecting(
+        cand.join(F.broadcast(a_shape), "a_id").join(F.broadcast(b_shape), "b_id")
     )
-    return scored.filter(F.col("edge_cross") | F.col("a_in_b") | F.col("b_in_a"))

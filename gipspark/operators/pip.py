@@ -10,11 +10,12 @@ Shapely-prepared polygon partitions)"). Spark-first shape:
    big point side equi-joins on its already-computed cell id, so the
    10^12-row scan never shuffles for this join and Catalyst pushes the
    cell computation/pruning into the scan stage.
-2. **Refine** (Arrow batch → NumPy): candidate (point, poly) pairs run
-   the exact even-odd ray cast (gipspark.geo.pip) in a vectorized
-   pandas UDF; polygon edge arrays ride to executors inside the UDF
-   closure (same role as the reference's Shapely *prepared* polygons —
-   preprocessed once, reused per batch).
+2. **Refine** (JVM, no Python): candidate (point, poly) pairs run the
+   exact even-odd ray cast of gipspark.geo.pip as a whole-stage-codegen
+   ``aggregate`` fold (:func:`ray_cast_inside`) over the polygon's edge
+   array, which rides in a broadcast (poly_id → edges) dim — the same
+   role as the reference's Shapely *prepared* polygons (preprocessed
+   once, reused per row).
 
 Scale notes: the broadcast cover is |polys|·|cover| rows (thousands) —
 tiny; refine cost is proportional to candidates only, and candidates
@@ -25,21 +26,28 @@ the salted hybrid join (gipspark.operators.skew) when needed.
 
 from __future__ import annotations
 
+import hashlib
+from collections import OrderedDict
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
-from gipspark.functions.cells import s2_cell
+from gipspark.functions.cells import s2_cell, s2_parent
 from gipspark.geo import pip as pipgeo
 
 COVER_SCHEMA = StructType(
     [StructField("__cell", LongType(), False), StructField("poly_id", LongType(), False)]
 )
+EDGES_T = "array<struct<x1:double,y1:double,x2:double,y2:double>>"
 
-_COVER_CACHE: dict = {}
+# LRU of driver-side covers keyed on (ring-bytes digest, level). Sized
+# above the largest zone pool a session reuses (perfbench zone_queries:
+# 1,500 pip zones + 100 zonal zones) so repeated zone sets always hit.
+_COVER_CACHE_MAX = 4096
+_COVER_CACHE: OrderedDict[tuple[bytes, int], np.ndarray] = OrderedDict()
 
 
 COVER_LEVELS = (6, 9, 12)  # quantized cover levels — bounds the probe
@@ -57,9 +65,14 @@ def choose_cover_level(rings: list[np.ndarray]) -> int:
     return min(COVER_LEVELS, key=lambda lv: abs(lv - raw))
 
 
-def _poly_key(p: dict) -> tuple:
-    r0 = p["rings"][0]
-    return (p["poly_id"], len(p["rings"]), len(r0), float(r0[0][0]), float(r0[0][1]))
+def _rings_digest(rings: list[np.ndarray]) -> bytes:
+    """Digest of every vertex of every ring; ring lengths are hashed too,
+    so the same vertices split into rings differently do not collide."""
+    h = hashlib.blake2b(digest_size=16)
+    for r in rings:
+        h.update(len(r).to_bytes(8, "little"))
+        h.update(r.tobytes())
+    return h.digest()
 
 
 def polygon_covers(polys: list[dict], level: int) -> pd.DataFrame:
@@ -67,12 +80,16 @@ def polygon_covers(polys: list[dict], level: int) -> pd.DataFrame:
     bench/pipeline reruns must not pay the sampling twice)."""
     rows_cell, rows_pid = [], []
     for p in polys:
-        key = (_poly_key(p), level)
+        rings = [np.ascontiguousarray(r, dtype=np.float64) for r in p["rings"]]
+        key = (_rings_digest(rings), level)
         cells = _COVER_CACHE.get(key)
         if cells is None:
-            rings = [np.asarray(r, dtype=np.float64) for r in p["rings"]]
             cells = pipgeo.polygon_cover(rings, level=level)
             _COVER_CACHE[key] = cells
+            if len(_COVER_CACHE) > _COVER_CACHE_MAX:
+                _COVER_CACHE.popitem(last=False)
+        else:
+            _COVER_CACHE.move_to_end(key)
         rows_cell.append(cells)
         rows_pid.append(np.full(len(cells), p["poly_id"], dtype=np.int64))
     return pd.DataFrame(
@@ -80,11 +97,35 @@ def polygon_covers(polys: list[dict], level: int) -> pd.DataFrame:
     )
 
 
-def _edges_by_pid(polys: list[dict]) -> dict[int, np.ndarray]:
-    return {
-        p["poly_id"]: pipgeo.rings_to_edges([np.asarray(r, dtype=np.float64) for r in p["rings"]])
-        for p in polys
-    }
+def edge_rows(rings: list) -> list[tuple[float, float, float, float]]:
+    """A polygon's (x1, y1, x2, y2) edges as plain tuples — one
+    :data:`EDGES_T` array value for ``createDataFrame``."""
+    edges = pipgeo.rings_to_edges([np.asarray(r, dtype=np.float64) for r in rings])
+    return [(float(x1), float(y1), float(x2), float(y2)) for x1, y1, x2, y2 in edges]
+
+
+def ray_cast_inside(x: Column, y: Column, edges: Column) -> Column:
+    """Even-odd inside test of point (x, y) against an :data:`EDGES_T`
+    array — the JVM twin of :func:`gipspark.geo.pip.points_in_polygon`
+    and of the DuckDB oracle's rule, textually: straddle test first, so
+    the xcross division only matters when y2 != y1. Spark's non-ANSI
+    Divide returns NULL on a zero divisor (not IEEE inf/nan), and
+    three-valued AND short-circuits `false AND NULL` to false — the
+    straddle gate is false exactly when y1 == y2, so the NULL never
+    escapes. NB: under spark.sql.ansi.enabled=true the division would
+    raise instead; gate horizontal edges explicitly before enabling ANSI
+    mode."""
+    crossings = F.aggregate(
+        edges,
+        F.lit(0),
+        lambda acc, e: acc
+        + F.when(
+            ((e.y1 > y) != (e.y2 > y))
+            & (x < (e.x2 - e.x1) * (y - e.y1) / (e.y2 - e.y1) + e.x1),
+            1,
+        ).otherwise(0),
+    )
+    return crossings % 2 == 1
 
 
 def pip_join(
@@ -96,7 +137,6 @@ def pip_join(
     cell_col: str | None = None,
     cell_level: int = 12,
     keep_all_points: bool = False,
-    refine: str = "jvm",
 ) -> DataFrame:
     """points ⋈ polygons → points' columns + ``poly_id``.
 
@@ -107,12 +147,9 @@ def pip_join(
     ``cell_col``/``cell_level``: reuse an existing S2 cell column for
     the group at that level (encode-once pipelines).
     ``keep_all_points``: left join semantics (unmatched → poly_id null).
-    ``refine``: "jvm" (default) runs the even-odd ray cast as a
-    whole-stage-codegen `aggregate` over a broadcast edges array — the
-    pipeline then has ONE python stage (the enrich pass) instead of
-    two; "pandas" keeps the NumPy kernel (identical rule; equality
-    property-tested), useful as an oracle and for polygons so large
-    that per-row edge arrays stop fitting a broadcast row.
+
+    Candidates are refined by :func:`ray_cast_inside` against a
+    broadcast (poly_id → edges) dim, so the join adds no Python stage.
 
     Polygons crossing the ±180° meridian are split into in-strip
     pieces first (geo/antimeridian.py; a no-op when nothing wraps) —
@@ -124,7 +161,6 @@ def pip_join(
     if len({p["poly_id"] for p in polys}) != len(polys):
         raise ValueError("pip_join: poly_id values must be unique")
     polys = normalize_antimeridian(polys)
-    edges = _edges_by_pid(polys)
 
     # group polygons by cover level
     groups: dict[int, list[dict]] = {}
@@ -135,12 +171,12 @@ def pip_join(
         groups.setdefault(lvl, []).append(p)
 
     # ONE pandas-UDF encode at the finest needed level; each point then
-    # explodes into its parent cell at every active cover level via the
-    # S2 parent bit trick ((cell & ~(lsb-1)) | lsb) — pure JVM bitwise
-    # arithmetic — and ONE broadcast equi-join probes the combined
-    # multi-level cover (cell ids self-describe their level, so there
-    # are no cross-level collisions). Single branch, single Python pass,
-    # |levels|× probe amplification, no shuffle.
+    # explodes into its parent cell at every active cover level
+    # (s2_parent, pure JVM bitwise arithmetic) and ONE broadcast
+    # equi-join probes the combined multi-level cover (cell ids
+    # self-describe their level, so there are no cross-level
+    # collisions). Single branch, single Python pass, |levels|× probe
+    # amplification, no shuffle.
     finest = max(groups)
     pts = points
     if cell_col is not None and cell_level >= finest:
@@ -150,13 +186,7 @@ def pip_join(
         pts = pts.withColumn(base, s2_cell(F.col(lat_col), F.col(lon_col), finest))
 
     def parent_expr(lvl: int):
-        if lvl == base_lvl:
-            return F.col(base)
-        lsb = 1 << (2 * (30 - lvl))
-        mask = (~(lsb - 1)) & 0xFFFFFFFFFFFFFFFF
-        if mask >= 1 << 63:
-            mask -= 1 << 64
-        return F.col(base).bitwiseAND(F.lit(mask)).bitwiseOR(F.lit(lsb))
+        return F.col(base) if lvl == base_lvl else s2_parent(F.col(base), lvl)
 
     cover_pd = pd.concat(
         [polygon_covers(ps, lvl) for lvl, ps in sorted(groups.items())], ignore_index=True
@@ -169,58 +199,15 @@ def pip_join(
         F.broadcast(cover.withColumnRenamed("__cell", "__pcell")), on="__pcell", how="inner"
     ).select(*points.columns, "poly_id")
 
-    if refine == "jvm":
-        # edges ride as a broadcast (poly_id → array<struct>) dim; the
-        # crossing rule below is the VERBATIM pipgeo.points_in_polygon
-        # rule (and the DuckDB oracle's): straddle test first, so the
-        # xcross division only matters when y2 != y1. Spark's non-ANSI
-        # Divide returns NULL on a zero divisor (not IEEE inf/nan), and
-        # three-valued AND short-circuits `false AND NULL` to false —
-        # the straddle gate is false exactly when y1 == y2, so the NULL
-        # never escapes. NB: under spark.sql.ansi.enabled=true the
-        # division would raise instead; gate horizontal edges explicitly
-        # before enabling ANSI mode.
-        edges_rows = [
-            (
-                int(pid),
-                [(float(x1), float(y1), float(x2), float(y2)) for x1, y1, x2, y2 in arr],
-            )
-            for pid, arr in edges.items()
-        ]
-        edges_df = spark.createDataFrame(
-            edges_rows,
-            "poly_id long, __edges array<struct<x1:double,y1:double,x2:double,y2:double>>",
-        )
-        lon_c, lat_c = F.col(lon_col), F.col(lat_col)
-        crossings = F.aggregate(
-            F.col("__edges"),
-            F.lit(0),
-            lambda acc, e: acc
-            + F.when(
-                ((e.y1 > lat_c) != (e.y2 > lat_c))
-                & (lon_c < (e.x2 - e.x1) * (lat_c - e.y1) / (e.y2 - e.y1) + e.x1),
-                1,
-            ).otherwise(0),
-        )
-        matched = (
-            cand.join(F.broadcast(edges_df), "poly_id")
-            .filter(crossings % 2 == 1)
-            .select(*points.columns, "poly_id")
-        )
-    else:
-
-        @pandas_udf(BooleanType())
-        def _refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-            out = np.zeros(len(lon), dtype=bool)
-            lo = lon.to_numpy(np.float64)
-            la = lat.to_numpy(np.float64)
-            pids = pid.to_numpy(np.int64)
-            for p in np.unique(pids):
-                m = pids == p
-                out[m] = pipgeo.points_in_polygon_batched(lo[m], la[m], edges[int(p)])
-            return pd.Series(out)
-
-        matched = cand.filter(_refine(F.col(lon_col), F.col(lat_col), F.col("poly_id")))
+    edges_df = spark.createDataFrame(
+        [(int(p["poly_id"]), edge_rows(p["rings"])) for p in polys],
+        f"poly_id long, __edges {EDGES_T}",
+    )
+    matched = (
+        cand.join(F.broadcast(edges_df), "poly_id")
+        .filter(ray_cast_inside(F.col(lon_col), F.col(lat_col), F.col("__edges")))
+        .select(*points.columns, "poly_id")
+    )
     if not keep_all_points:
         return matched
     return points.join(

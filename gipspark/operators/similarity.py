@@ -237,7 +237,8 @@ def _pq_codebooks(
     X = np.asarray([r[0] for r in rows], dtype=np.float64)
     X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     dim = X.shape[1]
-    assert dim % n_subs == 0, f"dim {dim} not divisible into {n_subs} subspaces"
+    if dim % n_subs:
+        raise ValueError(f"dim {dim} not divisible into {n_subs} subspaces")
     sd = dim // n_subs
     rng = np.random.default_rng(seed)
     books = np.zeros((n_subs, n_codes, sd))

@@ -4,8 +4,9 @@ tile assign → clustered write, checkpointed per stage.
 This is the BASELINE.json:2 benchmark subject ("H3-encode + PIP-join +
 tile-assign … docs/sec end-to-end") and the resume demonstration
 (BASELINE.json:6). Each stage is a declarative DataFrame; Python is
-crossed exactly twice per row batch (extract+geotag UDF pass, encode
-UDF pass) — everything else is whole-stage codegen.
+crossed exactly once per row batch (the fused extract+geotag+encode
+pass) — everything else, the PIP refine included, is whole-stage
+codegen.
 
 Stage list (names are manifest keys — stable across runs):
   s1_enrich   html → text', (lat,lon), s2/h3 cells, tile  [one fused
@@ -19,24 +20,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gipspark.functions.cells import h3_cell, s2_cell, tile_of
-from gipspark.functions.text import extract_text_udf, geotag_udf
+from gipspark.functions.cells import tile_of
 from gipspark.operators.pip import pip_join
 from gipspark.operators.skew import cluster_by_cell
 from gipspark.sources.checkpoint import CheckpointedRun
 
 
-def enrich_docs(docs: DataFrame, fused: bool = True, keep_html: bool = False) -> DataFrame:
+def enrich_docs(docs: DataFrame, keep_html: bool = False) -> DataFrame:
     """scan → extract/geotag → encode (bench hot path).
 
-    ``fused=True`` (default): ONE ``mapInPandas`` pass does extraction,
-    geotagging and both cell encodes — a single Arrow transfer of html
-    and a single Python worker pool. The unfused path chains 4 scalar
-    pandas UDFs, which Spark plans as stacked ArrowEvalPython nodes,
-    each with its own worker pool per core — measured 3× *slower* at
-    local[32] than local[8] from pure worker thrash (BENCH notes).
-    The fused plan is also what a 1000-executor run wants: narrow, no
-    shuffle, one python process per task slot.
+    ONE ``mapInPandas`` pass does extraction, geotagging and both cell
+    encodes — a single Arrow transfer of html and a single Python worker
+    pool. (Chaining one scalar pandas UDF per step plans stacked
+    ArrowEvalPython nodes, each with its own worker pool per core —
+    measured 3× *slower* at local[32] than local[8] from pure worker
+    thrash, BENCH notes.) The fused plan is also what a 1000-executor
+    run wants: narrow, no shuffle, one python process per task slot.
 
     ``keep_html=False`` (default) drops the html payload from the
     output: the bytes must cross INTO Python once (they are the input),
@@ -44,26 +43,6 @@ def enrich_docs(docs: DataFrame, fused: bool = True, keep_html: bool = False) ->
     downstream exchange — doubles the pipeline's byte volume for a
     column nothing downstream reads.
     """
-    if not fused:
-        g = docs.withColumn("__geo", geotag_udf(F.col("html"))).withColumn(
-            "text_extracted", extract_text_udf(F.col("html"))
-        )
-        g = (
-            g.withColumn("lat", F.col("__geo.lat"))
-            .withColumn("lon", F.col("__geo.lon"))
-            .drop("__geo")
-        )
-        geocoded = F.col("lat").isNotNull()
-        out = (
-            g.withColumn("cell", s2_cell(F.col("lat"), F.col("lon"), 12))
-            .withColumn("h3cell", h3_cell(F.col("lat"), F.col("lon"), 7))
-            .withColumn(
-                "tile_id",
-                F.when(geocoded, tile_of(F.col("lat"), F.col("lon"))).otherwise(F.lit(None)),
-            )
-        )
-        return out if keep_html else out.drop("html")
-
     from collections.abc import Iterator
 
     import numpy as np

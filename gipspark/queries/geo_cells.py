@@ -453,7 +453,8 @@ def s2_pyramid_rollup(spark, sf_dir):
     """Multi-resolution tile-pyramid rollup (the hypertable/continuous-
     aggregate pattern): per-cell counts at S2 level 16, then levels 12
     and 8 derived by re-aggregating the ALREADY-AGGREGATED level-16
-    partials through :func:`gipspark.geo.s2.parent` — the raw table is
+    partials through :func:`gipspark.functions.cells.s2_parent` (the JVM
+    twin of :func:`gipspark.geo.s2.parent`) — the raw table is
     scanned and shuffled exactly once; every coarser level is a rollup
     over at-most-|cells| rows, which is how a 10^12-row pyramid stays
     one-pass. The oracle replays the parent bit-math ((cell & ~(lsb-1))

@@ -7,12 +7,12 @@ in the state store and transitions are detected across micro-batch
 boundaries via applyInPandasWithState — the canonical "custom stateful
 operator" shape (SURVEY.md §2.10).
 
-The inside test itself is the VERBATIM even-odd crossing fold from
-operators/pip.py, but with the fence's edges inlined as a LITERAL
-array expression — fences are dim-sized, so each event's flags for all
-fences are pure whole-stage-codegen arithmetic: narrow, no join, no
-Python, exactly what a 10^12-event stream needs ahead of the single
-stateful shuffle on (user_id, poly_id).
+The inside test itself is operators.pip.ray_cast_inside, the pip
+refine's even-odd crossing fold, with the fence's edges inlined as a
+LITERAL array expression — fences are dim-sized, so each event's flags
+for all fences are pure whole-stage-codegen arithmetic: narrow, no
+join, no Python, exactly what a 10^12-event stream needs ahead of the
+single stateful shuffle on (user_id, poly_id).
 
 State is one integer per (user, fence) key with event-time eviction 24h
 past the key's last fix (bounded state; same EventTimeTimeout choice as
@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from gipspark.operators.pip import ray_cast_inside
 
 FENCE_STATE_SCHEMA = StructType([StructField("last_inside", IntegerType())])
 
@@ -65,19 +67,9 @@ def _edge_lits(rings: list[list[list[float]]]) -> Column:
 
 
 def inside_flag(lat: Column, lon: Column, rings: list[list[list[float]]]) -> Column:
-    """Even-odd inside test against literal edges — same crossing rule
-    as operators/pip.py's JVM refine, zero joins."""
-    crossings = F.aggregate(
-        _edge_lits(rings),
-        F.lit(0),
-        lambda acc, e: acc
-        + F.when(
-            ((e.y1 > lat) != (e.y2 > lat))
-            & (lon < (e.x2 - e.x1) * (lat - e.y1) / (e.y2 - e.y1) + e.x1),
-            1,
-        ).otherwise(0),
-    )
-    return (crossings % 2 == 1).cast("int")
+    """Even-odd inside test against literal edges — the pip refine's
+    ray cast, zero joins."""
+    return ray_cast_inside(lon, lat, _edge_lits(rings)).cast("int")
 
 
 def fence_flags(

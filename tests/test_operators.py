@@ -352,6 +352,17 @@ def test_ivfpq_recall_on_clustered_vectors(spark):
     assert recall >= 0.8, recall
 
 
+def test_pq_rejects_dim_not_divisible_into_subspaces(spark):
+    import pytest
+
+    from gipspark.operators.similarity import pq_cosine_topk
+
+    df = spark.createDataFrame([(0, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>")
+    q = df.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
+    with pytest.raises(ValueError, match="not divisible"):
+        pq_cosine_topk(q, df, k=1, n_subs=2)
+
+
 def test_pq_invariant_to_partitioning(spark):
     from gipspark.operators.similarity import pq_cosine_topk
 

@@ -127,7 +127,10 @@ def test_cover_superset_at_coarse_levels():
         assert cells <= cover, f"level {level}: {len(cells - cover)} cells escaped"
 
 
-def test_jvm_refine_equals_pandas_refine(spark):
+def test_pip_join_equals_numpy_ray_cast(spark):
+    """pip_join (multi-level cover prefilter + JVM ray cast, encoding the
+    points itself) returns exactly the pairs the NumPy ray cast finds by
+    brute force over every point and polygon."""
     from pyspark.sql import functions as F
 
     from gipspark.operators.pip import pip_join
@@ -136,12 +139,50 @@ def test_jvm_refine_equals_pandas_refine(spark):
 
     enr = enrich_docs(docs_df(spark, 3000)).filter(F.col("lat").isNotNull())
     polys = polygons(40)
-    jvm = {
+    got = {
         (r.url, r.poly_id)
-        for r in pip_join(enr, polys, cell_col="cell", refine="jvm").select("url", "poly_id").collect()
+        for r in pip_join(enr.drop("cell"), polys).select("url", "poly_id").collect()
     }
-    pdu = {
-        (r.url, r.poly_id)
-        for r in pip_join(enr, polys, cell_col="cell", refine="pandas").select("url", "poly_id").collect()
-    }
-    assert jvm == pdu and len(jvm) > 0
+    pts = enr.select("url", "lat", "lon").toPandas()
+    lon, lat = pts.lon.to_numpy(), pts.lat.to_numpy()
+    want = set()
+    for p in polys:
+        edges = pip.rings_to_edges([np.asarray(r, dtype=np.float64) for r in p["rings"]])
+        want |= {(u, p["poly_id"]) for u in pts.url[pip.points_in_polygon(lon, lat, edges)]}
+    assert got == want and len(got) > 0
+
+
+def test_cover_cache_follows_edited_rings(monkeypatch):
+    """An edited zone that keeps its poly_id, ring count, vertex count
+    and first vertex gets its own cover, not the cached one of its old
+    shape; the cache is an LRU bounded at _COVER_CACHE_MAX entries."""
+    from collections import OrderedDict
+
+    from gipspark.operators import pip as pipop
+
+    monkeypatch.setattr(pipop, "_COVER_CACHE", OrderedDict())
+    builds, real_cover = [], pip.polygon_cover
+
+    def counting_cover(rings, level):
+        builds.append(rings[0][2, 0])
+        return real_cover(rings, level=level)
+
+    monkeypatch.setattr(pipop.pipgeo, "polygon_cover", counting_cover)
+
+    def covers(side):
+        ring = [[0.0, 0.0], [side, 0.0], [side, side], [0.0, side], [0.0, 0.0]]
+        got = pipop.polygon_covers([{"poly_id": 7, "rings": [ring]}], 9)["__cell"]
+        return sorted(got.tolist()), ring
+
+    for side in (1.0, 2.0):
+        got, ring = covers(side)
+        assert got == sorted(real_cover([np.asarray(ring)], level=9).tolist())
+    assert builds == [1.0, 2.0]
+
+    monkeypatch.setattr(pipop, "_COVER_CACHE_MAX", 2)
+    covers(1.0)  # hit: 1.0 becomes most recent, 2.0 least
+    covers(3.0)  # miss: evicts 2.0
+    covers(1.0)
+    covers(2.0)
+    assert builds == [1.0, 2.0, 3.0, 2.0]
+    assert len(pipop._COVER_CACHE) == 2

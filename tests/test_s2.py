@@ -162,3 +162,26 @@ def test_token_roundtrippable_prefixes():
 
 if __name__ == "__main__":
     pytest.main([__file__, "-x", "-q"])
+
+
+def test_jvm_parent_equals_numpy_parent(spark):
+    """functions.cells.s2_parent (JVM bit trick) equals geo.s2.parent for
+    valid cells on all six faces (face-5 ids are negative as int64) at
+    every source and target level 0–30; a null cell stays null."""
+    from pyspark.sql import functions as F
+
+    from gipspark.functions.cells import s2_parent
+
+    face = np.repeat(np.arange(6), 8)
+    ij = RNG.integers(0, 1 << 30, (2, face.size))
+    leaf = s2.from_face_ij(face, ij[0], ij[1])
+    cells = np.concatenate([s2.parent(leaf, lvl) for lvl in range(31)])
+    assert (cells < 0).any()
+    df = spark.createDataFrame([(int(c),) for c in cells] + [(None,)], "cell long")
+    rows = df.select(
+        "cell", *[s2_parent(F.col("cell"), lvl).alias(f"p{lvl}") for lvl in range(31)]
+    ).collect()
+    assert [r for r in rows if r.cell is None] == [tuple([None] * 32)]
+    got = np.array([list(r) for r in rows if r.cell is not None], dtype=np.int64)
+    for lvl in range(31):
+        assert (got[:, lvl + 1] == s2.parent(got[:, 0], lvl)).all(), lvl
