@@ -85,8 +85,9 @@ def kring(cell: Column, level: int, k: int = 1) -> Column:
 
     @pandas_udf(ArrayType(LongType()))
     def _ring(c: pd.Series) -> pd.Series:
-        arr = s2.grid_disk(c.to_numpy(np.int64), level, k)
-        return pd.Series([np.unique(row).tolist() for row in arr])
+        row, ball = s2.grid_disk_pairs(c.to_numpy(np.int64), level, k)
+        ends = np.searchsorted(row, np.arange(len(c) + 1))
+        return pd.Series([ball[a:b].tolist() for a, b in zip(ends[:-1], ends[1:])])
 
     return _ring(cell)
 

@@ -332,13 +332,23 @@ def grid_disk(cell: np.ndarray, level: int, k: int) -> np.ndarray:
     contraction bound, see operators/knn._min_cell_width_m).
 
     May still contain duplicate ids (padding, corner wraps); callers
-    dedupe with array_distinct / np.unique per row.
+    that need each ball once use :func:`grid_disk_pairs`.
     """
     ball = np.asarray(cell, dtype=np.int64).reshape(-1, 1)
     for _ in range(k):
         nb = neighbor_offsets(ball.ravel(), level, _UNIT_STEPS).reshape(ball.shape[0], -1)
         ball = _compact_rows(np.concatenate([ball, nb], axis=1))
     return ball
+
+
+def grid_disk_pairs(cell: np.ndarray, level: int, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`grid_disk` deduped per row and flattened: (row index,
+    ball cell) pairs, rows in input order, each row's cells ascending
+    (np.unique order)."""
+    disk = np.sort(grid_disk(cell, level, k), axis=1)
+    keep = np.ones(disk.shape, dtype=bool)
+    keep[:, 1:] = disk[:, 1:] != disk[:, :-1]
+    return np.nonzero(keep)[0], disk[keep]
 
 
 def cell_token(cell: np.ndarray) -> np.ndarray:

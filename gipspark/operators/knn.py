@@ -1,36 +1,50 @@
 """kNN join via k-ring expansion with a coverage guarantee loop.
 
-north_star: "k-ring-expansion kNN" (BASELINE.json:6). Spark-first shape:
+north_star: "k-ring-expansion kNN" (BASELINE.json:6). Shape:
 
-- both sides carry an S2 cell at a coarse ``level``;
-- round ``r``: each live query explodes its radius-r adjacency ball
-  (gipspark.geo.s2.grid_disk — exact BFS across cube-face seams) and
-  equi-joins candidates on cell — a shuffle join on cell ids, never a
-  cross join;
-- exact haversine (JVM codegen, no Python) ranks candidates; a query is
-  *settled* when it has ≥ k candidates whose k-th distance is within the
-  ball's guaranteed covered radius r·min_cell_width — every point
-  outside the ball must be at least that far away (walk-contraction
-  bound, see _min_cell_width_m), so the top-k is provably exact;
+- the points carry an S2 cell at a coarse ``level``; queries with a
+  null coordinate are dropped, as an inner join on a null key would
+  drop them;
+- round ``r``: each live query's radius-r adjacency ball
+  (geo.s2.grid_disk — exact BFS across cube-face seams) is joined to
+  the points on cell, exact haversine (JVM codegen, no Python) ranks
+  the candidates and ONE action brings back how the round went;
+- a query is *settled* when it has k candidates whose k-th distance is
+  within the ball's guaranteed covered radius r·min_cell_width — every
+  point outside the ball must be at least that far away (walk-
+  contraction bound, see _min_cell_width_m), so the top-k is provably
+  exact;
 - unsettled queries re-expand (r doubles); after ``max_rounds`` the
-  stragglers (typically none) fall back to a bounded brute-force join.
+  stragglers (typically none) go through knn_join_brute, a bounded
+  broadcast nested-loop join of just those queries.
 
-At 10^12 points the candidate volume per query is O(k·skew), the big
-side shuffles once per round on cell id, and AQE handles residual
-skew; the driver never sees the data.
+The query side picks the plan. Up to _DRIVER_MAX_QUERIES rows it is
+the small build side of a hash join: it is collected once, its balls
+are built with the NumPy kernels and broadcast, the point side is
+scanned in place and never shuffled, each round returns ≤ k rows per
+live query to the driver, and the result is a local relation with
+nothing persisted. Past that (self-joins, whole-table query sides)
+the balls come from the kring UDF and shuffle-join on cell; each
+round's candidates are materialised once, the result is checkpointed
+once, and the per-round frames are unpersisted before the call
+returns — the driver sees counts, never rows.
 """
 
 from __future__ import annotations
 
+import functools
+import math
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from gipspark.functions.cells import kring, s2_cell
+from gipspark.geo import s2
 from gipspark.geo.haversine import haversine_col
-
-
-import functools
 
 
 # Published S2 metric (s2geometry s2metrics, quadratic projection):
@@ -70,6 +84,15 @@ def _min_cell_width_m(level: int) -> float:
     return _S2_MIN_WIDTH_DERIV * (2.0 ** -level) * _EARTH_RADIUS_M * 0.999
 
 
+# Largest query side knn_join brings to the driver, found with one
+# limit(N + 1) collect. Up to it the query balls are built with NumPy
+# and broadcast, and the result comes back as a local relation of at
+# most k·N rows. Past it (self-joins, whole-table query sides) the
+# balls are built and shuffle-joined in Spark and the driver holds no
+# rows of either side.
+_DRIVER_MAX_QUERIES = 2048
+
+
 def knn_join(
     queries: DataFrame,
     points: DataFrame,
@@ -88,90 +111,136 @@ def knn_join(
 
     Returns (q_id, p_id, dist_m, rank) with rank 1..k ordered by
     (dist_m, p_id) — the tie-break makes results deterministic and
-    oracle-comparable. ``n_points_hint`` skips the ``points.count()``
-    the density-adaptive level pick otherwise needs — at 10^12 rows
-    pass the table's known row count (catalog/manifest metadata)
-    instead of paying a full scan before the join starts.
-    """
-    if level is None and n_points_hint is not None:
-        import math
+    oracle-comparable. Queries with a null coordinate get no rows.
+    ``n_points_hint`` skips the ``points.count()`` the density-adaptive
+    level pick otherwise needs — at 10^12 rows pass the table's known
+    row count (catalog/manifest metadata) instead of paying a full scan
+    before the join starts.
 
-        target_cells = max(6, n_points_hint * 9 // (8 * k))
-        level = max(1, min(14, int(math.log(max(target_cells / 6, 1), 4))))
+    Each expansion round is one join of the (query, ball cell) rows
+    against the point scan and one action; stragglers after
+    ``max_rounds`` go through :func:`knn_join_brute`. A query side of
+    at most ``_DRIVER_MAX_QUERIES`` rows is collected once, its balls
+    are broadcast, and the result is a local relation; nothing is
+    persisted. A larger one stays in Spark (:func:`_rounds_in_spark`):
+    the result is checkpointed once and owned by the returned frame,
+    and the per-round frames are unpersisted before returning.
+    """
     if level is None:
         # density-adaptive: pick the level whose ring-1 disk (9 cells)
         # is expected to hold ~8k points, so most queries settle in the
         # first round instead of walking the expansion ladder
-        import math
-
-        n_pts = points.count()
+        n_pts = n_points_hint if n_points_hint is not None else points.count()
         target_cells = max(6, n_pts * 9 // (8 * k))
         level = max(1, min(14, int(math.log(max(target_cells / 6, 1), 4))))
 
-    # Persist both sides: the loop takes multiple actions per round and
-    # the cell encode is a pandas-UDF pass worth paying exactly once.
-    pts = points.select(
-        F.col(p_id),
-        F.col(p_lat),
-        F.col(p_lon),
-        s2_cell(F.col(p_lat), F.col(p_lon), level).alias("__pcell"),
-    ).persist()
-    live = queries.select(
-        F.col(q_id),
-        F.col(q_lat),
-        F.col(q_lon),
-        s2_cell(F.col(q_lat), F.col(q_lon), level).alias("__qcell"),
-    ).persist()
-    min_width = _min_cell_width_m(level)
-    settled_parts: list[DataFrame] = []
+    qs = queries.select(
+        q_id, F.col(q_lat).cast("double").alias(q_lat), F.col(q_lon).cast("double").alias(q_lon)
+    ).where(F.col(q_lat).isNotNull() & F.col(q_lon).isNotNull())
+    pts = points.select(p_id, p_lat, p_lon).where(
+        F.col(p_lat).isNotNull() & F.col(p_lon).isNotNull()
+    )
+    pts_at_level = pts.withColumn("__pcell", s2_cell(F.col(p_lat), F.col(p_lon), level))
     w = Window.partitionBy(q_id).orderBy(F.col("dist_m").asc(), F.col(p_id).asc())
 
+    def top_k(ring: DataFrame) -> DataFrame:
+        """(q_id, q_lat, q_lon, __pcell) rows → ≤ k nearest candidates per query."""
+        return (
+            ring.join(pts_at_level, "__pcell")
+            .withColumn(
+                "dist_m", haversine_col(F.col(q_lat), F.col(q_lon), F.col(p_lat), F.col(p_lon))
+            )
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(q_id, p_id, "dist_m", "rank")
+        )
+
+    def brute(stragglers: DataFrame) -> DataFrame:
+        return knn_join_brute(stragglers, pts, k, q_id, p_id, q_lat, q_lon, p_lat, p_lon)
+
+    head = qs.limit(_DRIVER_MAX_QUERIES + 1).toPandas()
+    if len(head) > _DRIVER_MAX_QUERIES:
+        return _rounds_in_spark(qs, top_k, brute, level, k, max_rounds, q_id, q_lat, q_lon)
+
+    spark = queries.sparkSession
+    ring_schema = StructType(qs.schema.fields + [StructField("__pcell", LongType())])
+    out_schema = StructType(
+        [
+            queries.schema[q_id],
+            points.schema[p_id],
+            StructField("dist_m", DoubleType()),
+            StructField("rank", IntegerType()),
+        ]
+    )
+    qcell = s2.latlng_to_cell(head[q_lat].to_numpy(), head[q_lon].to_numpy(), level)
+    min_width = _min_cell_width_m(level)
+    settled: list[pd.DataFrame] = []
+    live = np.arange(len(head))
     r = 1
     for _ in range(max_rounds):
-        cand = (
-            live.withColumn("__ring", kring(F.col("__qcell"), level, r))
-            .select(q_id, q_lat, q_lon, F.explode("__ring").alias("__pcell"))
-            .join(pts, on="__pcell")
-            .withColumn(
-                "dist_m", haversine_col(F.col(q_lat), F.col(q_lon), F.col(p_lat), F.col(p_lon))
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-        # a point outside the radius-r lattice disk is separated from the
+        if not live.size:
+            break
+        row, cell = s2.grid_disk_pairs(qcell[live], level, r)
+        ring = head.iloc[live[row]].reset_index(drop=True).assign(__pcell=cell)
+        cand = top_k(F.broadcast(spark.createDataFrame(ring, ring_schema))).toPandas()
+        # a point outside the radius-r lattice ball is separated from the
         # query cell by ≥ r full cell widths (the cells in between), so
         # the top-k is provably exact once kth ≤ r·min_width
-        guarantee = r * min_width
-        stats = cand.groupBy(q_id).agg(
-            F.count("*").alias("__n"), F.max("dist_m").alias("__kth")
-        )
-        ok_ids = stats.filter((F.col("__n") >= k) & (F.col("__kth") <= F.lit(guarantee)))
-        settled_parts.append(
-            cand.join(F.broadcast(ok_ids.select(q_id)), on=q_id, how="left_semi")
-        )
-        live = live.join(
-            F.broadcast(ok_ids.select(q_id)), on=q_id, how="left_anti"
-        ).persist()
-        # cheap emptiness probe per round: query side is small by contract
-        if live.count() == 0:
-            live = None
-            break
+        stats = cand.groupby(q_id, dropna=False)["dist_m"].agg(["size", "max"])
+        ok = stats.index[(stats["size"] >= k) & (stats["max"] <= r * min_width)]
+        settled.append(cand[cand[q_id].isin(ok)])
+        live = live[~head[q_id].iloc[live].isin(ok).to_numpy()]
         r *= 2
-    if live is not None and live.count() > 0:
-        brute = (
-            live.drop("__qcell")
-            .crossJoin(pts.drop("__pcell"))
-            .withColumn(
-                "dist_m", haversine_col(F.col(q_lat), F.col(q_lon), F.col(p_lat), F.col(p_lon))
+    if live.size:
+        stragglers = spark.createDataFrame(head.iloc[live].reset_index(drop=True), qs.schema)
+        settled.append(brute(stragglers).toPandas())
+    rows = pd.concat(settled, ignore_index=True) if settled else pd.DataFrame(columns=out_schema.names)
+    return spark.createDataFrame(rows, out_schema)
+
+
+def _rounds_in_spark(qs, top_k, brute, level, k, max_rounds, q_id, q_lat, q_lon) -> DataFrame:
+    """knn_join's rounds for a query side too large for the driver.
+
+    The balls come from the ``kring`` UDF and are shuffle-joined on
+    cell. Each round's candidates, flagged settled or not by a window
+    over the query, are persisted and materialised by the round's one
+    action (the settled-query count). The union of the settled rows is
+    checkpointed before the ``finally`` unpersists every frame the loop
+    persisted, so the returned frame reads its own blocks and the cache
+    keeps no entry of this call.
+    """
+    min_width = _min_cell_width_m(level)
+    by_q = Window.partitionBy(q_id)
+    held: list[DataFrame] = []
+    try:
+        live = qs.withColumn("__qcell", s2_cell(F.col(q_lat), F.col(q_lon), level)).persist()
+        held.append(live)
+        n_live = live.count()
+        parts: list[DataFrame] = []
+        r = 1
+        for _ in range(max_rounds):
+            ring = live.select(
+                q_id, q_lat, q_lon, F.explode(kring(F.col("__qcell"), level, r)).alias("__pcell")
             )
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-        settled_parts.append(brute)
-    out = settled_parts[0]
-    for part in settled_parts[1:]:
-        out = out.unionByName(part, allowMissingColumns=True)
-    return out.select(q_id, p_id, "dist_m", "rank")
+            kth_ok = F.max("dist_m").over(by_q) <= F.lit(r * min_width)
+            cand = top_k(ring).withColumn(
+                "__ok", (F.count("*").over(by_q) >= k) & kth_ok
+            ).persist()
+            held.append(cand)
+            ok = cand.where(F.col("__ok") & (F.col("rank") == 1)).select(q_id)
+            n_live -= ok.count()
+            parts.append(cand.where(F.col("__ok")).drop("__ok"))
+            r *= 2
+            if not n_live:
+                break
+            live = live.join(ok, q_id, "left_anti").persist()
+            held.append(live)
+        if n_live:
+            parts.append(brute(live.drop("__qcell")))
+        return functools.reduce(DataFrame.unionByName, parts).localCheckpoint()
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def within_join(

@@ -18,6 +18,7 @@ from gipspark.queries._base import (  # noqa: F401
     load,
     register,
     table_rows,
+    within_join,
 )
 from gipspark.queries._shared import (  # noqa: F401
     _AB_ARM,
@@ -11707,12 +11708,12 @@ def fca_accessibility_customers(spark, sf_dir):
     counts (supply side only) nor huff shares (no congestion) capture.
     Ratios are exact integer micro; the ONE distance join is computed
     once and reused by both steps (self-joining the pair list, not the
-    point tables). Scale shape: bounded supplier-dim broadcast ×
-    customers with a raw-haversine radius gate (the within_radius
-    discipline), then two hash aggs — at planetary scale the gate
-    becomes the cell-disk prefilter of within_join."""
-    from gipspark.geo.haversine import haversine_col
-
+    point tables). Scale shape: within_join's cell-disk prefilter with
+    the exact haversine ≤ d₀ gate, then two hash aggs. At d₀ = 3,000 km
+    within_join picks S2 level 2 (96 cells) with a radius-2 disk of up
+    to 25 cells, so the prefilter drops only about 3/4 of the customer
+    × supplier pairs; the pair count stays O(C·S), as it must when the
+    catchment is a quarter of the globe."""
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey",
         C.derived_lat(F.col("c_custkey")).alias("c_lat"),
@@ -11725,10 +11726,19 @@ def fca_accessibility_customers(spark, sf_dir):
         C.derived_lat(sk).alias("s_lat"),
         C.derived_lon(sk).alias("s_lon"),
     )
-    d = haversine_col(F.col("c_lat"), F.col("c_lon"), F.col("s_lat"), F.col("s_lon"))
     pairs = (
-        cust.crossJoin(F.broadcast(sup))
-        .filter(d <= F.lit(float(_FCA_D0_M)))
+        within_join(
+            cust,
+            sup,
+            radius_m=float(_FCA_D0_M),
+            l_id="c_custkey",
+            r_id="s_suppkey",
+            l_lat="c_lat",
+            l_lon="c_lon",
+            r_lat="s_lat",
+            r_lon="s_lon",
+        )
+        .join(F.broadcast(sup.select("s_suppkey", "cap")), "s_suppkey")
         .select("c_custkey", "s_suppkey", "cap")
         .localCheckpoint()
     )

@@ -1,6 +1,8 @@
 """Adversarial kNN configurations: the guarantee loop must equal brute
 force regardless of point distribution, seams, or parameter corners."""
 
+from unittest import mock
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -11,12 +13,16 @@ def _df(spark, ids, lat, lon, prefix):
     return spark.createDataFrame(rows, f"{prefix}_id long, {prefix}_lat double, {prefix}_lon double")
 
 
-def _assert_equal(spark, qs, pts, k, level=None):
-    from gipspark.operators.knn import knn_join, knn_join_brute
+def _assert_equal(spark, qs, pts, k, **kw):
+    """knn_join equals brute force with the query side on the driver
+    and, with the driver limit at 0, with the rounds in Spark."""
+    from gipspark.operators import knn
 
-    fast = {(r.q_id, r.p_id, r.rank) for r in knn_join(qs, pts, k=k, level=level).collect()}
-    brute = {(r.q_id, r.p_id, r.rank) for r in knn_join_brute(qs, pts, k=k).collect()}
-    assert fast == brute
+    brute = {(r.q_id, r.p_id, r.dist_m, r.rank) for r in knn.knn_join_brute(qs, pts, k=k).collect()}
+    for limit in (knn._DRIVER_MAX_QUERIES, 0):
+        with mock.patch.object(knn, "_DRIVER_MAX_QUERIES", limit):
+            fast = {(r.q_id, r.p_id, r.dist_m, r.rank) for r in knn.knn_join(qs, pts, k=k, **kw).collect()}
+        assert fast == brute, f"_DRIVER_MAX_QUERIES={limit}"
 
 
 @pytest.mark.parametrize("seed", [0, 1])
@@ -49,6 +55,108 @@ def test_k_exceeds_cluster_and_forced_fine_level(spark):
     qs = _df(spark, [0], [0.0], [0.0], "q")
     # forced too-fine level: every round under-fills → brute fallback path
     _assert_equal(spark, qs, pts, k=10, level=12)
+
+
+def test_closer_point_outside_first_ball_is_found(spark):
+    """k points in the query's radius-1 ball, all farther than a point
+    just outside it: round 1 may not settle, the outside point ranks 1."""
+    from gipspark.geo import s2
+    from gipspark.geo.haversine import haversine_m
+
+    level, qlat, qlon = 6, 10.3, 20.7
+    rng = np.random.default_rng(8)
+    lat, lon = qlat + rng.uniform(-3, 3, 4000), qlon + rng.uniform(-3, 3, 4000)
+    qcell = s2.latlng_to_cell(np.array([qlat]), np.array([qlon]), level)
+    inside = np.isin(s2.latlng_to_cell(lat, lon, level), s2.grid_disk_pairs(qcell, level, 1)[1])
+    d = haversine_m(qlat, qlon, lat, lon)
+    out = np.flatnonzero(~inside)[np.argmin(d[~inside])]
+    far = np.flatnonzero(inside & (d > d[out]))[:3]
+    assert len(far) == 3
+    keep = np.concatenate([[out], far])
+    pts = _df(spark, keep, lat[keep], lon[keep], "p")
+    qs = _df(spark, [0], [qlat], [qlon], "q")
+    _assert_equal(spark, qs, pts, k=3, level=level)
+
+
+def test_null_coordinate_queries_get_no_rows(spark):
+    from gipspark.operators.knn import knn_join
+
+    rng = np.random.default_rng(4)
+    pts = _df(spark, np.arange(30), rng.uniform(-5, 5, 30), rng.uniform(-5, 5, 30), "p")
+    qs = spark.createDataFrame(
+        [(0, 0.0, 0.0), (1, None, 1.0), (2, 1.0, None)], "q_id long, q_lat double, q_lon double"
+    )
+    got = knn_join(qs, pts, k=3).collect()
+    assert {r.q_id for r in got} == {0}
+    assert all(r.dist_m is not None for r in got)
+    _assert_equal(spark, qs.where("q_id = 0"), pts, k=3)
+
+
+def test_empty_queries_return_empty_frame_with_output_schema(spark):
+    from gipspark.operators.knn import knn_join
+
+    pts = _df(spark, np.arange(10), np.zeros(10), np.arange(10.0), "p")
+    qs = spark.createDataFrame([], "q_id long, q_lat double, q_lon double")
+    out = knn_join(qs, pts, k=3)
+    assert out.columns == ["q_id", "p_id", "dist_m", "rank"]
+    assert out.collect() == []
+
+
+def test_k_above_point_count_returns_every_point(spark):
+    from gipspark.operators.knn import knn_join
+
+    pts = _df(spark, np.arange(7), np.linspace(-1, 1, 7), np.linspace(2, 3, 7), "p")
+    qs = _df(spark, [0, 1], [0.0, 40.0], [0.0, -70.0], "q")
+    got = knn_join(qs, pts, k=10).collect()
+    for q in (0, 1):
+        mine = sorted((r.rank, r.p_id) for r in got if r.q_id == q)
+        assert [rk for rk, _ in mine] == list(range(1, 8))
+        assert {p for _, p in mine} == set(range(7))
+    _assert_equal(spark, qs, pts, k=10)
+
+
+def test_knn_join_persists_nothing(spark):
+    from gipspark.operators.knn import knn_join
+
+    rng = np.random.default_rng(5)
+    pts = _df(spark, np.arange(200), rng.uniform(-20, 20, 200), rng.uniform(-20, 20, 200), "p")
+    qs = _df(spark, np.arange(5), rng.uniform(-20, 20, 5), rng.uniform(-20, 20, 5), "q")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    knn_join(qs, pts, k=4).collect()
+    knn_join(qs, pts, k=4, level=12, max_rounds=1).collect()
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_straggler_fallback_equals_brute(spark):
+    rng = np.random.default_rng(6)
+    pts = _df(spark, np.arange(120), rng.uniform(-30, 30, 120), rng.uniform(-30, 30, 120), "p")
+    qs = _df(spark, np.arange(6), rng.uniform(-30, 30, 6), rng.uniform(-30, 30, 6), "q")
+    # one round of a level-12 ball (~2 km) settles no query: all take
+    # the brute branch
+    _assert_equal(spark, qs, pts, k=3, level=12, max_rounds=1)
+
+
+def test_large_query_side_rounds_in_spark(spark, monkeypatch):
+    """Past _DRIVER_MAX_QUERIES the rounds run in Spark: null-coordinate
+    queries are dropped, and of the frames the call persists only the
+    result's own checkpoint is left."""
+    from gipspark.operators import knn
+
+    calls = []
+    in_spark = knn._rounds_in_spark
+    monkeypatch.setattr(knn, "_DRIVER_MAX_QUERIES", 4)
+    monkeypatch.setattr(knn, "_rounds_in_spark", lambda *a: calls.append(a) or in_spark(*a))
+    rng = np.random.default_rng(7)
+    pts = _df(spark, np.arange(300), rng.uniform(-60, 60, 300), rng.uniform(-180, 180, 300), "p")
+    qs = _df(spark, np.arange(12), rng.uniform(-60, 60, 12), rng.uniform(-180, 180, 12), "q")
+    with_null = qs.unionByName(spark.createDataFrame([(99, None, 1.0)], qs.schema))
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    got = {tuple(r) for r in knn.knn_join(with_null, pts, k=5).collect()}
+    assert got == {tuple(r) for r in knn.knn_join_brute(qs, pts, k=5).collect()}
+    assert len(calls) == 1
+    assert jsc.getPersistentRDDs().size() <= before + 1
 
 
 def _within_brute(spark, lt, rt, radius):

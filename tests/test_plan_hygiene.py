@@ -26,7 +26,6 @@ SF_DIR = "/root/testdata/sf0.001"
 CROSS_OK = {
     "cosine_topk_bruteforce",
     "triplet_mining_embeddings",  # bounded anchor sample broadcast x corpus (exact-spec pattern)
-    "knn_join_nations",  # straggler fallback branch plans a bounded NL join
     "embedding_neardup_pairs",
     "gapfill_daily_events",  # tiny calendar × type-dim cross, broadcast
     "tfidf_top_terms",  # 1-row corpus-count aggregate broadcast into scored
@@ -53,7 +52,6 @@ CROSS_OK = {
     "table_fingerprint_diff",  # two 1-row snapshot fingerprints cross-combined
     "bivariate_moran_cells",  # 1-row moment broadcasts into the lattice (morans sibling)
     "cross_k_events",  # 1-row count aggregates broadcast into the radius bands (ripleys sibling)
-    "catchment_counts_suppliers",  # knn_join straggler fallback branch plans a bounded NL join
     "reciprocity_links",  # two 1-row count aggregates cross-combined (hll sibling)
     "modularity_by_source",  # 1-row edge-total broadcast into the source spine (chisq sibling)
     "ann_recall_contract",  # 1-row brute-denominator broadcast into per-method hit rows
@@ -107,7 +105,7 @@ CROSS_OK = {
     "cuped_adjustment_users",  # 1-row day-zero anchor broadcast (decayed_tile_heat sibling)
     "kmv_distinct_contract",  # 1-row kth-minimum scalar broadcast into the exact count
     "ams_f2_contract",  # 9-row sketch dim fan-out + 1-row exact-F2 broadcast
-    "rknn_influence_suppliers",  # knn straggler fallback + 1-row total broadcast (catchment sibling)
+    "rknn_influence_suppliers",  # 1-row total broadcast into the per-supplier counts
     "permutation_test_values",  # 64-row perm-dim fan-out + two 1-row anchors (jackknife sibling)
     "otsu_threshold_cells",  # 1-row vmax + 1-row total broadcasts into the 16-row histogram
     "banzhaf_power_sources",  # 64-coalition x 6-player literal power-set grid (constant size)
@@ -243,7 +241,6 @@ CROSS_OK |= {
     "mobility_motifs_users",  # 1-row census-total anchor broadcast
     "dasymetric_disaggregate_zones",  # 25-row nation-center broadcast x cells
     "price_endings_parts",  # 1-row total anchor into the 100-ending table
-    "fca_accessibility_customers",  # bounded supplier-dim broadcast x customers (facility sibling)
     "hypsometric_curve_cells",  # 11-row literal decile dim x ranked cell table
     "reach_frequency_curve_users",  # 5-row cap dim + 1-row total anchor broadcasts
     "group_kfold_assign",  # 1-row corpus-total anchor broadcast
