@@ -25,7 +25,6 @@ hit rate high), no shuffle beyond the caller's aggregation.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -85,10 +84,6 @@ def bpe_oracle_init(tok_expr: str) -> str:
         f"array_to_string(list_transform(regexp_extract_all({tok_expr}, '.'),"
         " c -> chr(2)||c||chr(3)), '')"
     )
-
-
-def bpe_count_col(tok: Column) -> Column:
-    return bpe_token_count(tok)
 
 
 def bpe_token_count_at(n_merges: int):

@@ -23,12 +23,17 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, Stru
 
 from gipspark.geo import h3x, s2
 
+# The S2 level of the ``cell`` column every encoded table carries
+# (enrich_docs, the gp_s2_cell12 SQL function); pip_join reuses a
+# ``cell_col`` at this level instead of re-encoding.
+CELL_LEVEL = 12
+
 # ---------------------------------------------------------------------------
 # encodes (pandas/Arrow UDFs over the NumPy kernels)
 # ---------------------------------------------------------------------------
 
 
-def s2_cell(lat: Column, lon: Column, level: int = 12) -> Column:
+def s2_cell(lat: Column, lon: Column, level: int = CELL_LEVEL) -> Column:
     """S2 cell id (int64) at ``level`` — the engine's primary index."""
 
     @pandas_udf(LongType())

@@ -98,7 +98,6 @@ _U = np.array([S0 / _D**r for r in range(MAX_RES + 1)])
 _DIGIT_AB = np.array(
     [(0, 0), (1, 0), (0, 1), (-1, 1), (-1, 0), (0, -1), (1, -1)], dtype=np.int64
 )
-_AB_TO_DIGIT = {tuple(ab): d for d, ab in enumerate(_DIGIT_AB.tolist())}
 
 
 def _hex_round(xf: np.ndarray, zf: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

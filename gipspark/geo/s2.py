@@ -26,7 +26,6 @@ import numpy as np
 
 MAX_LEVEL = 30
 MAX_SIZE = 1 << MAX_LEVEL  # ij coordinates are in [0, 2^30)
-POS_BITS = 2 * MAX_LEVEL + 1
 LOOKUP_BITS = 4
 SWAP_MASK = 1
 INVERT_MASK = 2

@@ -10,7 +10,9 @@ of a sparse trajectory... for the edge actually pierced.
 
 Plan shape: steps come from one lag-window over the trajectory (the
 only shuffle, on the entity key); the fence layer is a broadcast-size
-dimension riding in as ONE literal edge array. Each step explodes
+dimension riding in as ONE literal edge array — operators.distance's
+edge list (open rings closed), so edge_idx is the one snap_to_edge and
+the oracle's VALUES table use. Each step explodes
 against the edge array — a narrow generate, no join — then two exact
 filters:
 
@@ -34,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gipspark.operators.distance import _edge_rows
+from gipspark.operators.distance import _edge_array, _polygon_edges
 
 
 def _cross(ox: Column, oy: Column, ax: Column, ay: Column, bx: Column, by: Column) -> Column:
@@ -63,19 +65,7 @@ def segment_crossings(
         F.col(lat_col).alias("qy"),
     ).filter(F.col("px").isNotNull())
 
-    edges_lit = F.array(
-        *[
-            F.struct(
-                F.lit(pid).alias("poly_id"),
-                F.lit(i).alias("edge_idx"),
-                F.lit(x1).alias("x1"),
-                F.lit(y1).alias("y1"),
-                F.lit(x2).alias("x2"),
-                F.lit(y2).alias("y2"),
-            )
-            for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(polygons))
-        ]
-    )
+    edges = _edge_array(_polygon_edges(polygons))
     e = F.col("e")
     px, py, qx, qy = F.col("px"), F.col("py"), F.col("qx"), F.col("qy")
     bbox_ok = (
@@ -90,7 +80,7 @@ def segment_crossings(
     d4 = _cross(px, py, qx, qy, e.x2, e.y2)
     proper = (d1 * d2 < F.lit(0.0)) & (d3 * d4 < F.lit(0.0))
     return (
-        steps.select(id_col, *order_cols, "px", "py", "qx", "qy", F.explode(edges_lit).alias("e"))
+        steps.select(id_col, *order_cols, "px", "py", "qx", "qy", F.explode(edges).alias("e"))
         .filter(bbox_ok & proper)
         .select(id_col, *order_cols, e.poly_id.alias("poly_id"), e.edge_idx.alias("edge_idx"))
     )

@@ -1,4 +1,5 @@
-"""Nearest-polygon-boundary distance (the "distance to coastline" op).
+"""Nearest-polygon-boundary distance (the "distance to coastline" op),
+and the one owner of a polygon set's edges.
 
 For every point, the minimum point-to-segment distance over a polygon
 set's edges, plus WHICH polygon owns the nearest edge. The reference
@@ -17,10 +18,23 @@ at sf0.1 vs ~15 µs/row for the codegen'd least-tree (BENCH.md round 2).
 Same story for explode + min(struct): as fast per-row but pays a
 map-side-combined shuffle of |points| rows that the narrow form never
 does. The unroll caps the edge count (codegen size grows linearly,
-~64 KB method limits bite near a few hundred edges) — past UNROLL_CAP
-the *_auto dispatchers switch to the grid-indexed path at the bottom of
-this file, which handles any layer size with the SAME bit-exact result
-(tests/test_distance_grid.py).
+~64 KB method limits bite near a few hundred edges).
+
+Two entry points, one per output: :func:`nearest_edge` (nearest poly
+and distance) and :func:`snap_to_edge` (plus the winning edge and the
+snapped coordinate). Each takes the least-tree up to UNROLL_CAP edges
+and the grid-indexed path at the bottom of this file past it, which
+handles any layer size with the SAME bit-exact result
+(tests/test_distance_grid.py). The grid path needs ``key_col``, unique
+per point row; a streaming frame against a dim-sized layer stays on the
+narrow least-tree.
+
+The edges of a polygon set are enumerated once, by
+:func:`_polygon_edges`: (poly_id, edge_idx, x1, y1, x2, y2) in ring
+order, an open ring closed by repeating its first vertex. pip_join,
+overlay, crossing, viterbi, geofence and the oracle VALUES builders all
+read that list; :func:`_edge_array` turns it into the one literal array
+the narrow folds use.
 
 Exactness/portability: squared planar distance in degree² is computed
 with the textbook clamp-projection formula in a fixed textual operation
@@ -41,49 +55,93 @@ from pyspark.sql import functions as F
 
 # Past this many edges the unrolled least-tree stops being the right
 # plan (expression-tree build time and codegen method limits — BENCH.md
-# finding 11); the *_auto dispatchers switch to the grid-indexed path.
+# finding 11); nearest_edge/snap_to_edge switch to the grid-indexed path.
 UNROLL_CAP = 256
 
+_Edge = tuple[int, int, float, float, float, float]
 
-def _edge_rows(polygons: list[dict]) -> list[tuple[int, float, float, float, float]]:
-    rows = []
+
+def _polygon_edges(polygons: list[dict]) -> list[_Edge]:
+    """(poly_id, edge_idx, x1, y1, x2, y2) for every edge of every ring,
+    in ring order; edge_idx counts across the whole set. A ring whose
+    last vertex differs from its first is closed."""
+    edges: list[_Edge] = []
     for p in polygons:
+        pid = int(p["poly_id"])
         for ring in p["rings"]:
-            for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-                rows.append((int(p["poly_id"]), float(x1), float(y1), float(x2), float(y2)))
-    return rows
+            pts = [(float(x), float(y)) for x, y in ring]
+            if pts and pts[0] != pts[-1]:
+                pts.append(pts[0])
+            for (x1, y1), (x2, y2) in zip(pts[:-1], pts[1:]):
+                edges.append((pid, len(edges), x1, y1, x2, y2))
+    return edges
 
 
-def _cand(
-    px: Column, py: Column, pid: int, edge_idx: int | None, x1: float, y1: float, x2: float, y2: float
-) -> Column:
-    """(ticks, poly[, edge]) candidate struct for one edge.
+def _edge_array(edges: list[_Edge]) -> Column:
+    """The edges as ONE literal array<struct<poly_id, edge_idx, x1, y1,
+    x2, y2>> — Catalyst folds it to a constant."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(pid).alias("poly_id"),
+                F.lit(i).alias("edge_idx"),
+                F.lit(x1).alias("x1"),
+                F.lit(y1).alias("y1"),
+                F.lit(x2).alias("x2"),
+                F.lit(y2).alias("y2"),
+            )
+            for pid, i, x1, y1, x2, y2 in edges
+        ]
+    )
 
-    t = clamp(((p-a)·(b-a)) / |b-a|², 0, 1); d² = |p - (a + t(b-a))|².
-    Ring edges are never degenerate (consecutive ring vertices are
-    distinct by construction), so the division is safe. Edge-constant
-    subexpressions (x2-x1 etc.) constant-fold identically in Catalyst
-    and DuckDB — both are exact IEEE doubles.
+
+def _edge_ticks(
+    px: Column, py: Column, x1: Column, y1: Column, x2: Column, y2: Column
+) -> tuple[Column, Column, Column]:
+    """(ticks, cx, cy): point (px, py) against edge (x1, y1)–(x2, y2).
+
+    t = clamp(((p-a)·(b-a)) / |b-a|², 0, 1); c = a + t(b-a);
+    ticks = round(|p - c|²·10⁶) as BIGINT (round half up). Ring edges
+    are never degenerate (consecutive ring vertices are distinct by
+    construction), so the division is safe. With literal edges the
+    edge-constant subexpressions (x2-x1 etc.) constant-fold identically
+    in Catalyst and DuckDB — both are exact IEEE doubles.
     """
-    dx = F.lit(x2) - F.lit(x1)
-    dy = F.lit(y2) - F.lit(y1)
+    dx = x2 - x1
+    dy = y2 - y1
     l2 = dx * dx + dy * dy
     t = F.greatest(
-        F.lit(0.0), F.least(F.lit(1.0), ((px - F.lit(x1)) * dx + (py - F.lit(y1)) * dy) / l2)
+        F.lit(0.0), F.least(F.lit(1.0), ((px - x1) * dx + (py - y1) * dy) / l2)
     )
-    cx = F.lit(x1) + t * dx
-    cy = F.lit(y1) + t * dy
+    cx = x1 + t * dx
+    cy = y1 + t * dy
     d2 = (px - cx) * (px - cx) + (py - cy) * (py - cy)
-    ticks = F.round(d2 * F.lit(1000000.0), 0).cast("long")
-    fields = [ticks.alias("ticks"), F.lit(pid).cast("long").alias("poly")]
-    if edge_idx is not None:
-        fields.append(F.lit(edge_idx).alias("edge"))
-    return F.struct(*fields)
+    return F.round(d2 * F.lit(1000000.0), 0).cast("long"), cx, cy
+
+
+def _lit_ticks(px: Column, py: Column, x1: float, y1: float, x2: float, y2: float) -> Column:
+    """Tick distance to one literal edge."""
+    return _edge_ticks(px, py, F.lit(x1), F.lit(y1), F.lit(x2), F.lit(y2))[0]
+
+
+def _least_tree(px: Column, py: Column, edges: list[_Edge], with_edge: bool) -> Column:
+    """least() over (ticks, poly[, edge]) candidate structs, one per edge."""
+    cands = []
+    for pid, i, x1, y1, x2, y2 in edges:
+        fields = [
+            _lit_ticks(px, py, x1, y1, x2, y2).alias("ticks"),
+            F.lit(pid).cast("long").alias("poly"),
+        ]
+        if with_edge:
+            fields.append(F.lit(i).alias("edge"))
+        cands.append(F.struct(*fields))
+    return F.least(*cands)
 
 
 def nearest_edge(
     points: DataFrame,
     polygons: list[dict],
+    key_col: str | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
@@ -92,17 +150,33 @@ def nearest_edge(
     d2_ticks = round(d²·10⁶) as BIGINT (d in planar degrees).
     ``least`` over (ticks, poly) structs — deterministic argmin
     regardless of edge order, entirely inside whole-stage codegen.
+    Past UNROLL_CAP edges the grid path gives the same rows; it needs
+    ``key_col``.
     """
-    px, py = F.col(lon_col), F.col(lat_col)
-    best = F.least(
-        *[_cand(px, py, pid, None, x1, y1, x2, y2) for pid, x1, y1, x2, y2 in _edge_rows(polygons)]
-    )
+    edges = _polygon_edges(polygons)
+    if len(edges) > UNROLL_CAP:
+        return _edge_grid(points, edges, key_col, lat_col, lon_col).select(
+            *points.columns, "nearest_poly", "d2_ticks"
+        )
+    best = _least_tree(F.col(lon_col), F.col(lat_col), edges, with_edge=False)
     with_best = points.withColumn("_best", best)
     return (
         with_best.withColumn("nearest_poly", F.col("_best.poly"))
         .withColumn("d2_ticks", F.col("_best.ticks"))
         .drop("_best")
     )
+
+
+def _proj_sql(lat: str, lon: str) -> tuple[str, str]:
+    """(t, d²) SQL text over an edges row (x1, y1, x2, y2) and the
+    projected point (cx, cy) — the textual twin of :func:`_edge_ticks`."""
+    t = (
+        f"greatest(0.0, least(1.0, "
+        f"(({lon} - x1) * (x2 - x1) + ({lat} - y1) * (y2 - y1)) / "
+        f"((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1))))"
+    )
+    d2 = f"(({lon} - cx) * ({lon} - cx) + ({lat} - cy) * ({lat} - cy))"
+    return t, d2
 
 
 def nearest_edge_sql(
@@ -118,15 +192,11 @@ def nearest_edge_sql(
     The oracle may cross-join (it is not the scale path). With
     ``wrap_cte`` the final select becomes one more CTE of that name so
     callers can keep composing (map-matching smoothing)."""
-    vals = ", ".join(f"({pid}, {x1!r}, {y1!r}, {x2!r}, {y2!r})" for pid, x1, y1, x2, y2 in _edge_rows(polygons))
-    t = (
-        f"greatest(0.0, least(1.0, "
-        f"(({lon} - x1) * (x2 - x1) + ({lat} - y1) * (y2 - y1)) / "
-        f"((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1))))"
+    vals = ", ".join(
+        f"({pid}, {x1!r}, {y1!r}, {x2!r}, {y2!r})"
+        for pid, _, x1, y1, x2, y2 in _polygon_edges(polygons)
     )
-    d2 = (
-        f"(({lon} - cx) * ({lon} - cx) + ({lat} - cy) * ({lat} - cy))"
-    )
+    t, d2 = _proj_sql(lat, lon)
     body = f"""
 edges(poly_id, x1, y1, x2, y2) AS (VALUES {vals}),
 proj AS (
@@ -158,6 +228,7 @@ ranked AS (
 def snap_to_edge(
     points: DataFrame,
     polygons: list[dict],
+    key_col: str | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
 ) -> DataFrame:
@@ -168,49 +239,31 @@ def snap_to_edge(
     Same narrow least-tree as :func:`nearest_edge`, with the argmin
     carrying the winning EDGE index (ties: smaller ticks, then poly_id,
     then edge_idx); the snapped coordinate is then the clamp projection
-    onto that one edge, recomputed from a literal edge array via
+    onto that one edge, recomputed from the literal edge array via
     element_at — still zero joins, zero shuffles, all codegen.
     Projection arithmetic is +,-,*,/ and min/max only, in the same
     textual order as the SQL oracle; note the oracle's doubles can
     differ by 1 ulp (DuckDB fuses multiply-adds), so callers that hash
-    results quantize the snapped coords to 1e-6 ticks.
+    results quantize the snapped coords to 1e-6 ticks. Past UNROLL_CAP
+    edges the grid path gives the same rows; it needs ``key_col``.
     """
-    edge_list = _edge_rows(polygons)
+    edges = _polygon_edges(polygons)
+    if len(edges) > UNROLL_CAP:
+        return _edge_grid(points, edges, key_col, lat_col, lon_col)
     px, py = F.col(lon_col), F.col(lat_col)
-    best = F.least(
-        *[
-            _cand(px, py, pid, i, x1, y1, x2, y2)
-            for i, (pid, x1, y1, x2, y2) in enumerate(edge_list)
-        ]
-    )
-    edges_lit = F.array(
-        *[
-            F.struct(
-                F.lit(x1).alias("x1"),
-                F.lit(y1).alias("y1"),
-                F.lit(x2).alias("x2"),
-                F.lit(y2).alias("y2"),
-            )
-            for _, x1, y1, x2, y2 in edge_list
-        ]
-    )
+    best = _least_tree(px, py, edges, with_edge=True)
     with_best = points.withColumn("_best", best).withColumn(
-        "_e", F.element_at(edges_lit, F.col("_best.edge") + F.lit(1))
+        "_e", F.element_at(_edge_array(edges), F.col("_best.edge") + F.lit(1))
     )
     e = F.col("_e")
-    dx = e.x2 - e.x1
-    dy = e.y2 - e.y1
-    t = F.greatest(
-        F.lit(0.0),
-        F.least(F.lit(1.0), ((px - e.x1) * dx + (py - e.y1) * dy) / (dx * dx + dy * dy)),
-    )
+    _, cx, cy = _edge_ticks(px, py, e.x1, e.y1, e.x2, e.y2)
     return with_best.select(
         *points.columns,
         F.col("_best.poly").alias("nearest_poly"),
         F.col("_best.edge").cast("long").alias("edge_idx"),
         F.col("_best.ticks").alias("d2_ticks"),
-        (e.x1 + t * dx).alias("snap_lon"),
-        (e.y1 + t * dy).alias("snap_lat"),
+        cx.alias("snap_lon"),
+        cy.alias("snap_lat"),
     )
 
 
@@ -222,14 +275,9 @@ def snap_to_edge_sql(
     SAME textual projection on the winning edge."""
     vals = ", ".join(
         f"({pid}, {i}, {x1!r}, {y1!r}, {x2!r}, {y2!r})"
-        for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(polygons))
+        for pid, i, x1, y1, x2, y2 in _polygon_edges(polygons)
     )
-    t = (
-        f"greatest(0.0, least(1.0, "
-        f"(({lon} - x1) * (x2 - x1) + ({lat} - y1) * (y2 - y1)) / "
-        f"((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1))))"
-    )
-    d2 = f"(({lon} - cx) * ({lon} - cx) + ({lat} - cy) * ({lat} - cy))"
+    t, d2 = _proj_sql(lat, lon)
     return f"""
 edges(poly_id, edge_idx, x1, y1, x2, y2) AS (VALUES {vals}),
 proj AS (
@@ -286,9 +334,10 @@ FROM ranked WHERE rn = 1
 # Per level the plan is: narrow cell-id compute → equi join against the
 # edge index → ONE map-side-combinable min(struct) aggregate keyed by
 # the point id (the point's payload rides inside the struct, so there
-# is no join-back). The arithmetic per candidate is textually the same
-# clamp-projection + tick quantization as the least-tree, so the two
-# paths are bit-identical — tests/test_distance_grid.py asserts it.
+# is no join-back). The arithmetic per candidate is the same
+# _edge_ticks expression as the least-tree, over edge columns from the
+# index instead of literals, so the two paths are bit-identical —
+# tests/test_distance_grid.py asserts it.
 #
 # Requirements: ``key_col`` must be unique per point row, and point
 # payload columns must be orderable types (no maps) — they ride in a
@@ -296,20 +345,10 @@ FROM ranked WHERE rn = 1
 # ties, which cannot occur across distinct candidates.
 
 _SENTINEL_TICKS = 1 << 62
-
-
-def _edge_arrays(polygons: list[dict]):
-    import numpy as np
-
-    rows = _edge_rows(polygons)
-    if not rows:
-        raise ValueError("nearest_edge_grid: polygon layer has no edges")
-    pid = np.asarray([r[0] for r in rows], dtype=np.int64)
-    x1 = np.asarray([r[1] for r in rows], dtype=np.float64)
-    y1 = np.asarray([r[2] for r in rows], dtype=np.float64)
-    x2 = np.asarray([r[3] for r in rows], dtype=np.float64)
-    y2 = np.asarray([r[4] for r in rows], dtype=np.float64)
-    return pid, x1, y1, x2, y2
+# level-0 index size target (rows per edge; 9 is the floor, see
+# _pick_cell_size) and the index size past which it is shuffle-joined
+_INDEX_ROWS_PER_EDGE = 16
+_BROADCAST_INDEX_MAX = 2_000_000
 
 
 def _pick_cell_size(x1, y1, x2, y2, budget_rows: int) -> float:
@@ -370,21 +409,13 @@ def _edge_index_pdf(pid, x1, y1, x2, y2, g: float):
 
 
 def _grid_candidate_struct(px: Column, py: Column, payload: Column) -> Column:
-    """Same clamp-projection, tick quantization and (ticks, poly, edge)
-    ordering as :func:`_cand`, with edge coords as COLUMNS from the
-    index join instead of literals — identical IEEE arithmetic."""
-    x1, y1 = F.col("__ne_x1"), F.col("__ne_y1")
-    dx = F.col("__ne_x2") - x1
-    dy = F.col("__ne_y2") - y1
-    l2 = dx * dx + dy * dy
-    t = F.greatest(
-        F.lit(0.0), F.least(F.lit(1.0), ((px - x1) * dx + (py - y1) * dy) / l2)
+    """(ticks, poly, edge, slon, slat, payload) for one index row — the
+    least-tree's ordering, with edge coords as COLUMNS from the join."""
+    ticks, cx, cy = _edge_ticks(
+        px, py, F.col("__ne_x1"), F.col("__ne_y1"), F.col("__ne_x2"), F.col("__ne_y2")
     )
-    cx = x1 + t * dx
-    cy = y1 + t * dy
-    d2 = (px - cx) * (px - cx) + (py - cy) * (py - cy)
     return F.struct(
-        F.round(d2 * F.lit(1000000.0), 0).cast("long").alias("ticks"),
+        ticks.alias("ticks"),
         F.col("__ne_pid").alias("poly"),
         F.col("__ne_eidx").alias("edge"),
         cx.alias("slon"),
@@ -404,20 +435,25 @@ def _sentinel_struct(payload: Column) -> Column:
     )
 
 
-def _edge_grid_best(
+def _edge_grid(
     points: DataFrame,
-    polygons: list[dict],
-    key_col: str,
-    lat_col: str,
-    lon_col: str,
-    broadcast_rows: int = 2_000_000,
-    index_budget_per_edge: float = 16.0,
-    max_levels: int = 40,
+    edges: list[_Edge],
+    key_col: str | None,
+    lat_col: str = "lat",
+    lon_col: str = "lon",
 ) -> DataFrame:
-    """(key, __ne_best struct) with the exact global argmin per point."""
+    """Grid-indexed :func:`snap_to_edge`: the same rows at any layer size
+    (the exact global argmin per point)."""
+    import numpy as np
+
+    if key_col is None:
+        raise ValueError(f"key_col is required past UNROLL_CAP ({UNROLL_CAP}) edges")
+    if not edges:
+        raise ValueError("polygon layer has no edges")
     spark = points.sparkSession
-    pid, x1, y1, x2, y2 = _edge_arrays(polygons)
-    budget = max(int(index_budget_per_edge * len(pid)), 4096)
+    pid = np.asarray([e[0] for e in edges], dtype=np.int64)
+    x1, y1, x2, y2 = np.asarray([e[2:] for e in edges], dtype=np.float64).T
+    budget = max(_INDEX_ROWS_PER_EDGE * len(pid), 4096)
     g = _pick_cell_size(x1, y1, x2, y2, budget)
 
     pcols = points.columns
@@ -428,10 +464,12 @@ def _edge_grid_best(
         _sentinel_struct(payload).alias("__ne_best"),
     )
     settled = []
-    for level in range(max_levels):
+    # g doubles every level and the level with g ≥ 540° settles every
+    # point, so the loop ends
+    while True:
         idx_pdf = _edge_index_pdf(pid, x1, y1, x2, y2, g)
         idx = spark.createDataFrame(idx_pdf)
-        if len(idx_pdf) <= broadcast_rows:
+        if len(idx_pdf) <= _BROADCAST_INDEX_MAX:
             idx = F.broadcast(idx)
         pts_l = pending.select(
             "__ne_key", "__ne_px", "__ne_py", "__ne_best",
@@ -459,7 +497,6 @@ def _edge_grid_best(
         if g >= 540.0:
             # every edge is indexed under every cell: exact by exhaustion
             settled.append(merged)
-            pending = None
             break
         merged = merged.localCheckpoint(eager=True)
         threshold = int(g * g * 1e6) - 1
@@ -467,76 +504,16 @@ def _edge_grid_best(
         settled.append(merged.filter(done))
         pending = merged.filter(~done)
         if pending.limit(1).count() == 0:
-            pending = None
             break
         g *= 2.0
-    if pending is not None:
-        raise RuntimeError("nearest_edge_grid: did not settle within max_levels")
     out = settled[0]
     for s in settled[1:]:
         out = out.unionByName(s)
-    return out.select("__ne_best")
-
-
-def nearest_edge_grid(
-    points: DataFrame,
-    polygons: list[dict],
-    key_col: str,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Scale-path :func:`nearest_edge`: same output, any layer size."""
-    best = _edge_grid_best(points, polygons, key_col, lat_col, lon_col)
-    return best.select(
-        *[F.col(f"__ne_best.p.{c}").alias(c) for c in points.columns],
-        F.col("__ne_best.poly").alias("nearest_poly"),
-        F.col("__ne_best.ticks").alias("d2_ticks"),
-    )
-
-
-def snap_to_edge_grid(
-    points: DataFrame,
-    polygons: list[dict],
-    key_col: str,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-) -> DataFrame:
-    """Scale-path :func:`snap_to_edge`: same output, any layer size."""
-    best = _edge_grid_best(points, polygons, key_col, lat_col, lon_col)
-    return best.select(
-        *[F.col(f"__ne_best.p.{c}").alias(c) for c in points.columns],
+    return out.select(
+        *[F.col(f"__ne_best.p.{c}").alias(c) for c in pcols],
         F.col("__ne_best.poly").alias("nearest_poly"),
         F.col("__ne_best.edge").alias("edge_idx"),
         F.col("__ne_best.ticks").alias("d2_ticks"),
         F.col("__ne_best.slon").alias("snap_lon"),
         F.col("__ne_best.slat").alias("snap_lat"),
     )
-
-
-def nearest_edge_auto(
-    points: DataFrame,
-    polygons: list[dict],
-    key_col: str,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    cap: int = UNROLL_CAP,
-) -> DataFrame:
-    """Dispatch: least-tree for dim-sized layers, grid index past the
-    unroll cap — a coastline layer can no longer break the plan."""
-    if len(_edge_rows(polygons)) <= cap:
-        return nearest_edge(points, polygons, lat_col, lon_col)
-    return nearest_edge_grid(points, polygons, key_col, lat_col, lon_col)
-
-
-def snap_to_edge_auto(
-    points: DataFrame,
-    polygons: list[dict],
-    key_col: str,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    cap: int = UNROLL_CAP,
-) -> DataFrame:
-    """Dispatch twin of :func:`nearest_edge_auto` for the snap family."""
-    if len(_edge_rows(polygons)) <= cap:
-        return snap_to_edge(points, polygons, lat_col, lon_col)
-    return snap_to_edge_grid(points, polygons, key_col, lat_col, lon_col)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from gipspark.functions.cells import s2_parent
 from gipspark.geo import pip as pipgeo
+from gipspark.operators.distance import _polygon_edges
 from gipspark.operators.pip import (
     COVER_LEVELS,
     EDGES_T,
@@ -67,7 +68,7 @@ def _side_dfs(
     shape_rows = [
         (
             int(p["poly_id"]),
-            edge_rows(p["rings"]),
+            edge_rows(p),
             float(p["rings"][0][0][0]),
             float(p["rings"][0][0][1]),
         )
@@ -100,22 +101,32 @@ def _proper_cross(ea, eb):
     return (oa1 * oa2 < 0) & (ob1 * ob2 < 0)
 
 
-_EDGES_FROM_RINGS = (
-    "flatten(transform({col}, r -> zip_with("
-    "slice(r, 1, size(r) - 1), slice(r, 2, size(r) - 1), "
-    "(p, q) -> struct(p[0] as x1, p[1] as y1, q[0] as x2, q[1] as y2))))"
-)
+def _poly_shape_df(df: DataFrame, prefix: str) -> DataFrame:
+    """(id, edges, vx, vy) from a (poly_id, rings) table, one Arrow batch
+    per task; the edges are operators.distance's one edge list, so an
+    open ring is closed here as on the driver-side path."""
 
+    def gen(batches):
+        for b in batches:
+            edges = [
+                [
+                    dict(zip(("x1", "y1", "x2", "y2"), e[2:]))
+                    for e in _polygon_edges([{"poly_id": pid, "rings": rings}])
+                ]
+                for pid, rings in zip(b["poly_id"], b["rings"])
+            ]
+            yield pd.DataFrame(
+                {
+                    f"{prefix}_id": b["poly_id"],
+                    f"{prefix}_edges": edges,
+                    f"{prefix}_vx": [float(r[0][0][0]) for r in b["rings"]],
+                    f"{prefix}_vy": [float(r[0][0][1]) for r in b["rings"]],
+                }
+            )
 
-def _poly_shape_cols(df: DataFrame, prefix: str) -> DataFrame:
-    """(id, edges, vx, vy) from a (poly_id, rings) DataFrame — edge
-    construction is pure JVM array HOFs (rings must be closed: first
-    point repeated last, the fixture/POLY_SCHEMA convention)."""
-    return df.select(
-        F.col("poly_id").alias(f"{prefix}_id"),
-        F.expr(_EDGES_FROM_RINGS.format(col="rings")).alias(f"{prefix}_edges"),
-        F.expr("rings[0][0][0]").alias(f"{prefix}_vx"),
-        F.expr("rings[0][0][1]").alias(f"{prefix}_vy"),
+    return df.select("poly_id", "rings").mapInPandas(
+        gen,
+        f"{prefix}_id long, {prefix}_edges {EDGES_T}, {prefix}_vx double, {prefix}_vy double",
     )
 
 
@@ -180,15 +191,16 @@ def _intersecting(pairs: DataFrame) -> DataFrame:
 def overlay_join_df(a_polys_df: DataFrame, b_polys_df: DataFrame) -> DataFrame:
     """DataFrame-native overlay join: both polygon sides are tables of
     (poly_id, rings) — the parcels×zones shape where neither side fits
-    on the driver. Covers are computed distributed (mapInPandas, narrow),
-    candidates shuffle on the normalized cover cell (bounded by cover
-    occupancy), and the refine joins shapes back on poly_id — no
-    broadcast anywhere, so both sides scale horizontally. Predicates
-    are identical to :func:`overlay_join` (same oracle applies)."""
+    on the driver. Covers and edge arrays are computed distributed
+    (mapInPandas, narrow), candidates shuffle on the normalized cover
+    cell (bounded by cover occupancy), and the refine joins shapes back
+    on poly_id — no broadcast anywhere, so both sides scale
+    horizontally. Predicates are identical to :func:`overlay_join`
+    (same oracle applies)."""
     cand = _candidates(_poly_cover_df(a_polys_df, "a"), _poly_cover_df(b_polys_df, "b"))
     return _intersecting(
-        cand.join(_poly_shape_cols(a_polys_df, "a"), "a_id").join(
-            _poly_shape_cols(b_polys_df, "b"), "b_id"
+        cand.join(_poly_shape_df(a_polys_df, "a"), "a_id").join(
+            _poly_shape_df(b_polys_df, "b"), "b_id"
         )
     )
 

@@ -35,8 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from gipspark.functions.cells import s2_cell, s2_parent
+from gipspark.functions.cells import CELL_LEVEL, s2_cell, s2_parent
 from gipspark.geo import pip as pipgeo
+from gipspark.operators.distance import _polygon_edges
 
 COVER_SCHEMA = StructType(
     [StructField("__cell", LongType(), False), StructField("poly_id", LongType(), False)]
@@ -97,11 +98,10 @@ def polygon_covers(polys: list[dict], level: int) -> pd.DataFrame:
     )
 
 
-def edge_rows(rings: list) -> list[tuple[float, float, float, float]]:
-    """A polygon's (x1, y1, x2, y2) edges as plain tuples — one
-    :data:`EDGES_T` array value for ``createDataFrame``."""
-    edges = pipgeo.rings_to_edges([np.asarray(r, dtype=np.float64) for r in rings])
-    return [(float(x1), float(y1), float(x2), float(y2)) for x1, y1, x2, y2 in edges]
+def edge_rows(poly: dict) -> list[tuple[float, float, float, float]]:
+    """A polygon's (x1, y1, x2, y2) edges (operators.distance's one edge
+    list) — one :data:`EDGES_T` array value for ``createDataFrame``."""
+    return [e[2:] for e in _polygon_edges([poly])]
 
 
 def ray_cast_inside(x: Column, y: Column, edges: Column) -> Column:
@@ -135,8 +135,6 @@ def pip_join(
     lon_col: str = "lon",
     level: int | None = None,
     cell_col: str | None = None,
-    cell_level: int = 12,
-    keep_all_points: bool = False,
 ) -> DataFrame:
     """points ⋈ polygons → points' columns + ``poly_id``.
 
@@ -144,9 +142,8 @@ def pip_join(
     ``level``: force one cover level; default picks one per polygon
     (choose_cover_level) and unions per-level prefilter joins — one
     shuffle-free broadcast join per distinct level (≤3 in practice).
-    ``cell_col``/``cell_level``: reuse an existing S2 cell column for
-    the group at that level (encode-once pipelines).
-    ``keep_all_points``: left join semantics (unmatched → poly_id null).
+    ``cell_col``: reuse an existing S2 cell column at
+    :data:`~gipspark.functions.cells.CELL_LEVEL` (encode-once pipelines).
 
     Candidates are refined by :func:`ray_cast_inside` against a
     broadcast (poly_id → edges) dim, so the join adds no Python stage.
@@ -179,8 +176,8 @@ def pip_join(
     # amplification, no shuffle.
     finest = max(groups)
     pts = points
-    if cell_col is not None and cell_level >= finest:
-        base, base_lvl = cell_col, cell_level
+    if cell_col is not None and CELL_LEVEL >= finest:
+        base, base_lvl = cell_col, CELL_LEVEL
     else:
         base, base_lvl = "__cellbase", finest
         pts = pts.withColumn(base, s2_cell(F.col(lat_col), F.col(lon_col), finest))
@@ -200,16 +197,11 @@ def pip_join(
     ).select(*points.columns, "poly_id")
 
     edges_df = spark.createDataFrame(
-        [(int(p["poly_id"]), edge_rows(p["rings"])) for p in polys],
+        [(int(p["poly_id"]), edge_rows(p)) for p in polys],
         f"poly_id long, __edges {EDGES_T}",
     )
-    matched = (
+    return (
         cand.join(F.broadcast(edges_df), "poly_id")
         .filter(ray_cast_inside(F.col(lon_col), F.col(lat_col), F.col("__edges")))
         .select(*points.columns, "poly_id")
-    )
-    if not keep_all_points:
-        return matched
-    return points.join(
-        matched.select(*points.columns, "poly_id"), on=points.columns, how="left"
     )

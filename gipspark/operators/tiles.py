@@ -16,12 +16,6 @@ from pyspark.sql import functions as F
 from gipspark.functions.cells import tile_of
 
 
-def assign_tiles(
-    df: DataFrame, lat_col: str = "lat", lon_col: str = "lon", out_col: str = "tile_id"
-) -> DataFrame:
-    return df.withColumn(out_col, tile_of(F.col(lat_col), F.col(lon_col)))
-
-
 def inventory(
     df: DataFrame,
     ts_col: str = "warc_ts",

@@ -12,9 +12,9 @@ Model (integer costs end to end, so the DP is exact and replayable):
   "candidate roads/admin zones" contract as the snap family — states
   are bounded, points are not);
 - emission cost of ping t in state s: the squared planar distance from
-  the ping to polygon s's nearest boundary edge, in the SAME integer
-  1e-6-degree² ticks as operators/distance.py (identical clamp-
-  projection formula, quantize-then-min);
+  the ping to polygon s's nearest boundary edge, in integer
+  1e-6-degree² ticks from operators/distance.py's one tick expression
+  over its one edge list (quantize-then-min);
 - transition cost: 0 to stay, ``switch_cost_ticks`` to change feature —
   the standard constant-penalty HMM that trades emission slack against
   trajectory stability; λ=0 degenerates to per-ping nearest (raw), a
@@ -44,25 +44,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gipspark.operators.distance import _edge_rows
+from gipspark.operators.distance import _lit_ticks, _polygon_edges
 
 
-def _poly_ticks(px, py, edges) -> "F.Column":
-    """Min integer-tick distance to one polygon's edge set — the same
-    textual clamp-projection + round-half-up as distance._cand."""
-    cands = []
-    for _, x1, y1, x2, y2 in edges:
-        dx = F.lit(x2) - F.lit(x1)
-        dy = F.lit(y2) - F.lit(y1)
-        l2 = dx * dx + dy * dy
-        t = F.greatest(
-            F.lit(0.0),
-            F.least(F.lit(1.0), ((px - F.lit(x1)) * dx + (py - F.lit(y1)) * dy) / l2),
-        )
-        cx = F.lit(x1) + t * dx
-        cy = F.lit(y1) + t * dy
-        d2 = (px - cx) * (px - cx) + (py - cy) * (py - cy)
-        cands.append(F.round(d2 * F.lit(1000000.0), 0).cast("long"))
+def _poly_ticks(px, py, poly: dict) -> "F.Column":
+    """Min integer-tick distance to one polygon's edges — the
+    least-tree's tick expression (operators.distance._edge_ticks)."""
+    cands = [_lit_ticks(px, py, *e[2:]) for e in _polygon_edges([poly])]
     return F.least(*cands) if len(cands) > 1 else cands[0]
 
 
@@ -87,7 +75,7 @@ def viterbi_match(
     if len(set(state_ids)) != len(state_ids):
         raise ValueError("viterbi_match: poly_id values must be unique")
     px, py = F.col(lon_col), F.col(lat_col)
-    em = F.array(*[_poly_ticks(px, py, _edge_rows([p])) for p in polys])
+    em = F.array(*[_poly_ticks(px, py, p) for p in polys])
     obs = points.select(
         F.col(user_col).alias("u"),
         F.struct(

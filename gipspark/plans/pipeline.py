@@ -20,13 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gipspark.functions.cells import tile_of
+from gipspark.functions.cells import CELL_LEVEL, tile_of
 from gipspark.operators.pip import pip_join
 from gipspark.operators.skew import cluster_by_cell
 from gipspark.sources.checkpoint import CheckpointedRun
 
 
-def enrich_docs(docs: DataFrame, keep_html: bool = False) -> DataFrame:
+def enrich_docs(docs: DataFrame) -> DataFrame:
     """scan → extract/geotag → encode (bench hot path).
 
     ONE ``mapInPandas`` pass does extraction, geotagging and both cell
@@ -37,11 +37,11 @@ def enrich_docs(docs: DataFrame, keep_html: bool = False) -> DataFrame:
     thrash, BENCH notes.) The fused plan is also what a 1000-executor
     run wants: narrow, no shuffle, one python process per task slot.
 
-    ``keep_html=False`` (default) drops the html payload from the
-    output: the bytes must cross INTO Python once (they are the input),
-    but shipping them back out through Arrow — and through every
-    downstream exchange — doubles the pipeline's byte volume for a
-    column nothing downstream reads.
+    The html payload is dropped from the output: the bytes must cross
+    INTO Python once (they are the input), but shipping them back out
+    through Arrow — and through every downstream exchange — doubles the
+    pipeline's byte volume for a column nothing downstream reads. The
+    S2 ``cell`` is at :data:`~gipspark.functions.cells.CELL_LEVEL`.
     """
     from collections.abc import Iterator
 
@@ -58,7 +58,7 @@ def enrich_docs(docs: DataFrame, keep_html: bool = False) -> DataFrame:
     from gipspark.functions.text import extract_text_series, geotag_frame
     from gipspark.geo import h3x, s2
 
-    out_fields = [f for f in docs.schema.fields if keep_html or f.name != "html"]
+    out_fields = [f for f in docs.schema.fields if f.name != "html"]
     out_schema = StructType(
         out_fields
         + [
@@ -82,9 +82,7 @@ def enrich_docs(docs: DataFrame, keep_html: bool = False) -> DataFrame:
             )
             geo = geotag_frame(html_s)
             text = extract_text_series(html_s)
-            if not keep_html:
-                b = b.drop(columns=["html"])
-            b = b.assign(
+            b = b.drop(columns=["html"]).assign(
                 text_extracted=text,
                 lat=geo["lat"].to_numpy(),
                 lon=geo["lon"].to_numpy(),
@@ -95,7 +93,7 @@ def enrich_docs(docs: DataFrame, keep_html: bool = False) -> DataFrame:
             if m.any():
                 la = geo["lat"].to_numpy(np.float64)[m]
                 lo = geo["lon"].to_numpy(np.float64)[m]
-                cell[m] = s2.latlng_to_cell(la, lo, 12)
+                cell[m] = s2.latlng_to_cell(la, lo, CELL_LEVEL)
                 h3c[m] = h3x.latlng_to_cell(la, lo, 7)
             b = b.assign(
                 cell=pd.array(

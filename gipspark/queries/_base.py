@@ -74,12 +74,14 @@ ORACLE_POLYGONS: list[dict] = [
 
 
 def _poly_edges_values_sql(polys: list[dict]) -> str:
-    """Polygon edges as a VALUES table (poly_id, x1, y1, x2, y2)."""
-    rows = []
-    for p in polys:
-        for ring in p["rings"]:
-            for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-                rows.append(f"({p['poly_id']},{x1!r},{y1!r},{x2!r},{y2!r})")
+    """Polygon edges (operators.distance's one edge list) as a VALUES
+    table (poly_id, x1, y1, x2, y2)."""
+    from gipspark.operators.distance import _polygon_edges
+
+    rows = [
+        f"({pid},{x1!r},{y1!r},{x2!r},{y2!r})"
+        for pid, _, x1, y1, x2, y2 in _polygon_edges(polys)
+    ]
     return "(VALUES " + ",".join(rows) + ") AS e(poly_id, x1, y1, x2, y2)"
 
 
@@ -102,16 +104,6 @@ def _pip_matches_sql(pts_cte: str, id_col: str) -> str:
 
 _LAT = C.DERIVED_LAT_SQL
 _LON = C.DERIVED_LON_SQL
-
-
-def _cust_pts_sql() -> str:
-    return (
-        "(SELECT c_custkey, "
-        + _LAT.format(k="c_custkey")
-        + " AS lat, "
-        + _LON.format(k="c_custkey")
-        + " AS lon FROM customer)"
-    )
 
 
 def _cust_pts(spark: SparkSession, sf_dir: str) -> DataFrame:

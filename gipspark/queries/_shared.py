@@ -379,16 +379,16 @@ def _overlay_values(polys: list[dict], edge_alias: str) -> tuple[str, str]:
     """(edges_values, vertex_values) SQL fragments with ::DOUBLE casts
     (the orientation products would otherwise multiply DECIMALs and
     overflow, as the raster oracle did)."""
-    erows, vrows = [], []
-    for p in polys:
-        for ring in p["rings"]:
-            for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-                erows.append(
-                    f"({p['poly_id']},{x1!r}::DOUBLE,{y1!r}::DOUBLE,"
-                    f"{x2!r}::DOUBLE,{y2!r}::DOUBLE)"
-                )
-        vx, vy = p["rings"][0][0]
-        vrows.append(f"({p['poly_id']},{vx!r}::DOUBLE,{vy!r}::DOUBLE)")
+    from gipspark.operators.distance import _polygon_edges
+
+    erows = [
+        f"({pid},{x1!r}::DOUBLE,{y1!r}::DOUBLE,{x2!r}::DOUBLE,{y2!r}::DOUBLE)"
+        for pid, _, x1, y1, x2, y2 in _polygon_edges(polys)
+    ]
+    vrows = [
+        f"({p['poly_id']},{p['rings'][0][0][0]!r}::DOUBLE,{p['rings'][0][0][1]!r}::DOUBLE)"
+        for p in polys
+    ]
     edges = (
         "(VALUES "
         + ",".join(erows)
@@ -676,15 +676,15 @@ def _pii_aug_col() -> F.Column:
 
 
 def _poly_edges_idx_values_sql(polys: list[dict]) -> str:
-    """Edges as VALUES with the SAME edge enumeration as
-    operators.distance._edge_rows (polys → rings → consecutive pairs)."""
-    rows = []
-    i = 0
-    for p in polys:
-        for ring in p["rings"]:
-            for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-                rows.append(f"({p['poly_id']},{i},{x1!r},{y1!r},{x2!r},{y2!r})")
-                i += 1
+    """Edges as VALUES (poly_id, edge_idx, x1, y1, x2, y2), read from
+    operators.distance._polygon_edges — the list segment_crossings
+    explodes, so edge_idx agrees between the engines."""
+    from gipspark.operators.distance import _polygon_edges
+
+    rows = [
+        f"({pid},{i},{x1!r},{y1!r},{x2!r},{y2!r})"
+        for pid, i, x1, y1, x2, y2 in _polygon_edges(polys)
+    ]
     return "(VALUES " + ",".join(rows) + ") AS e(poly_id, edge_idx, x1, y1, x2, y2)"
 
 
@@ -2106,8 +2106,6 @@ _SURP_SCALE = 1000000000  # 1e9 fixed-point bigram probability
 
 _NA_SCALE = 1000000000000  # 1e12 fixed-point hazard ticks
 
-_NA_CENSOR_DAYS = 30
-
 
 
 _CHI2_MIN_FREQ = 5
@@ -2624,94 +2622,6 @@ def _boot_mult_sql(u: str) -> str:
 
 
 _BH_ALPHA_Q = 50_000  # alpha = 0.05 in 1e6 ticks
-
-
-
-_JL_IN = 64
-
-_JL_OUT = 8
-
-_JL_SCALE = 1024
-
-_JL_NPAIRS = 16
-
-
-
-def _jl_sign(i: int, j: int) -> int:
-    """Frozen ±1 projection entry from the md5 of the literal key —
-    computed once in Python and inlined as a literal coefficient in
-    BOTH engines, so the 'random' matrix is part of the query text."""
-    import hashlib
-
-    h = int(hashlib.md5(f"jl:{i}:{j}".encode()).hexdigest()[:15], 16)
-    return 1 - 2 * (h % 2)
-
-
-
-def _jl_sql() -> str:
-    dims = range(1, _JL_IN + 1)
-    outs = range(1, _JL_OUT + 1)
-    qcols = ", ".join(
-        f"cast(round(embedding[{j}]::double * {_JL_SCALE}) as bigint) AS q{j}" for j in dims
-    )
-    pcols = ", ".join(
-        "("
-        + " + ".join(f"({_jl_sign(i, j)}) * q{j}" for j in dims)
-        + f") AS p{i}"
-        for i in outs
-    )
-    d2e = " + ".join(f"(a.q{j} - b.q{j}) * (a.q{j} - b.q{j})" for j in dims)
-    d2p = " + ".join(f"(a.p{i} - b.p{i}) * (a.p{i} - b.p{i})" for i in outs)
-    return f"""
-WITH q AS (SELECT vec_id, {qcols} FROM embeddings WHERE vec_id < {2 * _JL_NPAIRS}),
-p AS (SELECT vec_id, *, {pcols} FROM q)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       cast({d2e} as bigint) AS d2_exact,
-       cast({d2p} as bigint) AS d2_proj,
-       cast(({d2p}) * 1000000 // ({_JL_OUT} * ({d2e})) as bigint) AS ratio_q
-FROM p a JOIN p b ON b.vec_id = a.vec_id + 1
-WHERE a.vec_id % 2 = 0 AND ({d2e}) > 0
-"""
-
-
-
-_TRUSS_K = 4  # support >= K-2 = 2 triangles per surviving edge
-
-_TRUSS_ROUNDS = 3
-
-
-
-def _truss_sql() -> str:
-    head = f"""
-WITH edges_raw AS (
-  SELECT doc_id AS src,
-         (doc_id + 1 + {_TRI_DST} % 25) % (SELECT count(*) FROM documents) AS dst
-  FROM documents, (VALUES (0),(1),(2),(4),(5)) AS t(j)
-), und0 AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM edges_raw WHERE src <> dst
-)"""
-    body = []
-    for t in range(1, _TRUSS_ROUNDS + 1):
-        p = t - 1
-        body.append(
-            f""", sym{p} AS (
-  SELECT a AS s, b AS d FROM und{p} UNION ALL SELECT b, a FROM und{p}
-), sup{t} AS (
-  SELECT e.a, e.b, cast(count(*) as bigint) AS sup
-  FROM und{p} e
-  JOIN sym{p} s1 ON s1.s = e.a
-  JOIN sym{p} s2 ON s2.s = e.b AND s2.d = s1.d
-  GROUP BY e.a, e.b
-), und{t} AS (
-  SELECT a, b FROM sup{t} WHERE sup >= {_TRUSS_K - 2}
-)"""
-        )
-    counts = " UNION ALL ".join(
-        f"SELECT {t} AS round, (SELECT cast(count(*) as bigint) FROM und{t}) AS n_edges"
-        for t in range(_TRUSS_ROUNDS + 1)
-    )
-    return head + "".join(body) + "\n" + counts
 
 
 
@@ -3422,10 +3332,6 @@ FROM stats ORDER BY curve
 
 
 
-_CONF_ALPHA_NUM = 9  # coverage target 9/10
-
-
-
 _BPE_ROUNDS = 4
 
 
@@ -4088,11 +3994,11 @@ def _snap_tick_expr(lon: str, lat: str, x1: float, y1: float, x2: float, y2: flo
 
 
 def _snap_ambiguity_oracle() -> str:
-    from gipspark.operators.distance import _edge_rows
+    from gipspark.operators.distance import _polygon_edges
 
     cands = ", ".join(
         f"({pid}, {i}, {_snap_tick_expr('p.lon', 'p.lat', x1, y1, x2, y2)})"
-        for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(ORACLE_POLYGONS))
+        for pid, i, x1, y1, x2, y2 in _polygon_edges(ORACLE_POLYGONS)
     )
     return f"""
 WITH p AS (

@@ -240,10 +240,10 @@ def nearest_edge_customers(spark, sf_dir):
     Quantize-then-argmin keeps the winner exact on both engines; the
     oracle cross-joins the same edges (bounded, oracle-only) and ranks
     by the identical integer ticks."""
-    from gipspark.operators.distance import nearest_edge_auto
+    from gipspark.operators.distance import nearest_edge
 
     pts = _cust_pts(spark, sf_dir)
-    return nearest_edge_auto(pts, ORACLE_POLYGONS, key_col="c_custkey").select(
+    return nearest_edge(pts, ORACLE_POLYGONS, key_col="c_custkey").select(
         "c_custkey", "nearest_poly", "d2_ticks"
     )
 
@@ -1813,7 +1813,7 @@ WITH d AS (
 ), t AS (SELECT cast(sum(n) as bigint) AS total FROM c)
 SELECT c.digit, c.n,
        cast(c.n as double) / cast(t.total as double) AS observed,
-       {_BENFORD_CASE} AS expected
+       cast({_BENFORD_CASE} as double) AS expected
 FROM c, t
 """,
 )
@@ -1838,7 +1838,7 @@ def benford_orders(spark, sf_dir):
         "digit",
         "n",
         (F.col("n").cast("double") / F.col("total").cast("double")).alias("observed"),
-        F.expr(_BENFORD_CASE).alias("expected"),
+        F.expr(_BENFORD_CASE).cast("double").alias("expected"),
     )
 
 
@@ -2409,9 +2409,9 @@ WITH v AS (
          cast(sum(cast(i as decimal(38,0)) * cents) as decimal(38,0)) AS ix_sum
   FROM v GROUP BY pri
 )
-SELECT pri, n, sum_cents,
-       cast(2 * ix_sum - (n + 1) * sum_cents as decimal(38,0)) AS gini_num,
-       cast(n * sum_cents as decimal(38,0)) AS gini_den,
+SELECT pri, n, cast(sum_cents as bigint) AS sum_cents,
+       cast(cast(2 * ix_sum - (n + 1) * sum_cents as decimal(38,0)) as double) AS gini_num,
+       cast(cast(n * sum_cents as decimal(38,0)) as double) AS gini_den,
        cast(2 * ix_sum - (n + 1) * sum_cents as double)
          / cast(n * sum_cents as double) AS gini
 FROM s
@@ -2451,9 +2451,9 @@ def gini_concentration_orders(spark, sf_dir):
     ).cast(dec)
     gini_den = (F.col("n").cast(dec) * F.col("sum_cents")).cast(dec)
     return s.select(
-        "pri", "n", "sum_cents",
-        gini_num.alias("gini_num"),
-        gini_den.alias("gini_den"),
+        "pri", "n", F.col("sum_cents").cast("long").alias("sum_cents"),
+        gini_num.cast("double").alias("gini_num"),
+        gini_den.cast("double").alias("gini_den"),
         (gini_num.cast("double") / gini_den.cast("double")).alias("gini"),
     )
 
@@ -2482,7 +2482,8 @@ WITH pts AS (
   SELECT ax, ay, cast(sum(cents) as decimal(38,0)) AS value_a_cents
   FROM z GROUP BY ax, ay
 )
-SELECT i.ax, i.ay, i.bx, i.by_, i.n_int, a.n_a, v.value_a_cents,
+SELECT i.ax, i.ay, i.bx, i.by_, i.n_int, a.n_a,
+       cast(v.value_a_cents as bigint) AS value_a_cents,
        cast(i.n_int as double) / cast(a.n_a as double) AS weight,
        cast(v.value_a_cents as double) * cast(i.n_int as double)
          / cast(a.n_a as double) AS alloc_value
@@ -2526,7 +2527,8 @@ def areal_interp_zones(spark, sf_dir):
         ints.join(F.broadcast(za), ["ax", "ay"])
         .join(F.broadcast(va), ["ax", "ay"])
         .select(
-            "ax", "ay", "bx", "by_", "n_int", "n_a", "value_a_cents",
+            "ax", "ay", "bx", "by_", "n_int", "n_a",
+            F.col("value_a_cents").cast("long").alias("value_a_cents"),
             (F.col("n_int").cast("double") / F.col("n_a").cast("double")).alias(
                 "weight"
             ),
@@ -7927,7 +7929,8 @@ WITH assign AS (
          cast(CASE WHEN sum(nij) % 2 = 0 THEN cast(sum(nij) // 2 as DECIMAL(38,0)) * (sum(nij) - 1) ELSE cast(sum(nij) as DECIMAL(38,0)) * ((sum(nij) - 1) // 2) END as DECIMAL(38,0)) AS c2
   FROM cont
 )
-SELECT t.n, a.a AS a_pairs, r.p AS p_sum, c.q AS q_sum, t.c2 AS total_pairs,
+SELECT t.n, cast(a.a as bigint) AS a_pairs, cast(r.p as bigint) AS p_sum,
+       cast(c.q as bigint) AS q_sum, cast(t.c2 as bigint) AS total_pairs,
        cast(t.c2 + 2 * a.a - r.p - c.q as double) / cast(t.c2 as double) AS rand_index,
        cast(2 * (a.a * t.c2 - r.p * c.q) as double)
          / cast(t.c2 * (r.p + c.q) - 2 * r.p * c.q as double) AS adjusted_rand
@@ -7983,10 +7986,10 @@ def rand_index_clusterings(spark, sf_dir):
     )
     return joined.select(
         "n",
-        F.col("a").alias("a_pairs"),
-        F.col("p").alias("p_sum"),
-        F.col("q").alias("q_sum"),
-        F.col("c2").alias("total_pairs"),
+        F.col("a").cast("long").alias("a_pairs"),
+        F.col("p").cast("long").alias("p_sum"),
+        F.col("q").cast("long").alias("q_sum"),
+        F.col("c2").cast("long").alias("total_pairs"),
         ri.alias("rand_index"),
         ari.alias("adjusted_rand"),
     )
@@ -8316,10 +8319,10 @@ def linear_reference_customers(spark, sf_dir):
     rounding. Scale shape: the snap itself is the zero-join broadcast
     fold of snap_to_edge_customers; the chainage adds one window over
     the EDGE DIM and one dim equi-join."""
-    from gipspark.operators.distance import _edge_rows, snap_to_edge_auto
+    from gipspark.operators.distance import _polygon_edges, snap_to_edge
 
     pts = _cust_pts(spark, sf_dir)
-    snapped = snap_to_edge_auto(pts, ORACLE_POLYGONS, key_col="c_custkey").select(
+    snapped = snap_to_edge(pts, ORACLE_POLYGONS, key_col="c_custkey").select(
         "c_custkey",
         "nearest_poly",
         "edge_idx",
@@ -8328,10 +8331,7 @@ def linear_reference_customers(spark, sf_dir):
         F.round(F.col("snap_lat") * 1000000.0, 0).cast("long").alias("snap_lat_ticks"),
     )
     edges = spark.createDataFrame(
-        [
-            (pid, i, x1, y1, x2, y2)
-            for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(ORACLE_POLYGONS))
-        ],
+        _polygon_edges(ORACLE_POLYGONS),
         "poly_id long, edge_idx long, x1 double, y1 double, x2 double, y2 double",
     )
     wlen = (

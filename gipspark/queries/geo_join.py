@@ -80,9 +80,8 @@ FROM pts p LEFT JOIN m ON p.c_custkey = m.c_custkey
 )
 def pip_left_join_coverage(spark, sf_dir):
     pts = _cust_pts(spark, sf_dir).filter(F.col("c_custkey") < 400)
-    return pip_join(pts, ORACLE_POLYGONS, level=7, keep_all_points=True).select(
-        "c_custkey", "poly_id"
-    )
+    m = pip_join(pts, ORACLE_POLYGONS, level=7).select("c_custkey", "poly_id")
+    return pts.select("c_custkey").join(m, "c_custkey", "left")
 
 
 
@@ -360,10 +359,10 @@ def snap_to_edge_customers(spark, sf_dir):
     1 ulp across engines (DuckDB's compiled multiply-add contracts
     where the JVM never fuses), and the house rule is to quantize any
     libm/FMA-sensitive value before it reaches a hash."""
-    from gipspark.operators.distance import snap_to_edge_auto
+    from gipspark.operators.distance import snap_to_edge
 
     pts = _cust_pts(spark, sf_dir)
-    return snap_to_edge_auto(pts, ORACLE_POLYGONS, key_col="c_custkey").select(
+    return snap_to_edge(pts, ORACLE_POLYGONS, key_col="c_custkey").select(
         "c_custkey",
         "nearest_poly",
         "edge_idx",
@@ -608,7 +607,7 @@ def reverse_geocode_customers(spark, sf_dir):
     runs ONLY on the PIP-miss anti-join, so the expensive edge scan
     touches just the outside points. Ambiguous containment (overlapping
     fences) resolves deterministically to min(poly_id)."""
-    from gipspark.operators.distance import nearest_edge_auto
+    from gipspark.operators.distance import nearest_edge
 
     pts = _cust_pts(spark, sf_dir)
     inside = (
@@ -617,7 +616,7 @@ def reverse_geocode_customers(spark, sf_dir):
         .agg(F.min("poly_id").cast("long").alias("poly_id"))
     )
     rest = pts.join(inside.select("c_custkey"), "c_custkey", "left_anti")
-    near = nearest_edge_auto(rest, ORACLE_POLYGONS, key_col="c_custkey").select(
+    near = nearest_edge(rest, ORACLE_POLYGONS, key_col="c_custkey").select(
         "c_custkey",
         F.when(F.col("d2_ticks") <= _REVGEO_TICKS, F.col("nearest_poly").cast("long")).alias("poly_id"),
         F.when(F.col("d2_ticks") <= _REVGEO_TICKS, F.lit("near")).otherwise(F.lit("none")).alias("method"),
@@ -777,7 +776,8 @@ WITH ed AS (
 ), cnt AS (
   SELECT poly_id, cast(count(*) as bigint) AS n_inside FROM m GROUP BY poly_id
 )
-SELECT g.poly_id, g.n_edges, g.area2, g.cx_num, g.cy_num,
+SELECT g.poly_id, g.n_edges, g.area2,
+       cast(g.cx_num as double) AS cx_num, cast(g.cy_num as double) AS cy_num,
        coalesce(c.n_inside, 0) AS n_inside,
        cast(g.cx_num as double) / (3.0 * cast(g.area2 as double) * 1000000.0) AS cx_deg,
        cast(g.cy_num as double) / (3.0 * cast(g.area2 as double) * 1000000.0) AS cy_deg,
@@ -799,14 +799,12 @@ def polygon_density_customers(spark, sf_dir):
     Shape: the polygon side is a ~40-row literal table (one tiny agg);
     the density join reuses the broadcast cell-cover PIP path — the
     only scan of a big table is the point side."""
+    from gipspark.operators.distance import _polygon_edges
+
     dec = "decimal(38,0)"
-    rows = []
-    for p in ORACLE_POLYGONS:
-        for ring in p["rings"]:
-            for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-                rows.append((int(p["poly_id"]), x1, y1, x2, y2))
     ed = spark.createDataFrame(
-        rows, "poly_id int, x1 double, y1 double, x2 double, y2 double"
+        [(pid, x1, y1, x2, y2) for pid, _, x1, y1, x2, y2 in _polygon_edges(ORACLE_POLYGONS)],
+        "poly_id int, x1 double, y1 double, x2 double, y2 double",
     ).select(
         "poly_id",
         F.round(F.col("x1") * 1000000).cast("long").alias("xa"),
@@ -839,8 +837,8 @@ def polygon_density_customers(spark, sf_dir):
         "poly_id",
         "n_edges",
         "area2",
-        "cx_num",
-        "cy_num",
+        F.col("cx_num").cast("double").alias("cx_num"),
+        F.col("cy_num").cast("double").alias("cy_num"),
         "n_inside",
         (F.col("cx_num").cast("double") / denom).alias("cx_deg"),
         (F.col("cy_num").cast("double") / denom).alias("cy_deg"),
@@ -1316,13 +1314,13 @@ def snap_ambiguity_customers(spark, sf_dir):
     fan-out over the edge dim + one point-partitioned window; for
     10⁴+-edge layers the grid-indexed prefilter path bounds the same
     fan-out."""
-    from gipspark.operators.distance import _edge_rows
+    from gipspark.operators.distance import _polygon_edges
 
     pts = _cust_pts(spark, sf_dir)
     elems = ", ".join(
         f"named_struct('poly_id', {pid}, 'edge_idx', {i}, "
         f"'ticks', {_snap_tick_expr('lon', 'lat', x1, y1, x2, y2)})"
-        for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(ORACLE_POLYGONS))
+        for pid, i, x1, y1, x2, y2 in _polygon_edges(ORACLE_POLYGONS)
     )
     cand = pts.select(
         "c_custkey", F.explode(F.expr(f"array({elems})")).alias("c")

@@ -796,7 +796,7 @@ WITH RECURSIVE nodes AS (
 )
 SELECT n.id AS p_partkey, r.root_id, r.depth, n.cents,
        coalesce(s.n_desc, cast(0 as bigint)) AS n_desc,
-       cast(n.cents + coalesce(s.desc_cents, 0) as decimal(38,0)) AS subtree_cents
+       cast(n.cents + coalesce(s.desc_cents, 0) as bigint) AS subtree_cents
 FROM nodes n
 JOIN rootd r ON r.id = n.id
 LEFT JOIN sub s ON s.id = n.id
@@ -861,7 +861,7 @@ def bom_rollup_parts(spark, sf_dir):
             "cents",
             F.coalesce("n_desc", F.lit(0).cast("long")).alias("n_desc"),
             (F.col("cents").cast(dec) + F.coalesce(F.col("desc_cents"), F.lit(0).cast(dec)))
-            .cast(dec)
+            .cast("long")
             .alias("subtree_cents"),
         )
     )

@@ -2303,7 +2303,7 @@ WITH c AS (
          cast(sum(cast(n as hugeint) * n) as decimal(38,0)) AS sum_sq
   FROM c GROUP BY source
 )
-SELECT source, n_docs, n_langs, sum_sq,
+SELECT source, n_docs, n_langs, cast(sum_sq as bigint) AS sum_sq,
        cast(sum_sq as double) / (cast(n_docs as double) * cast(n_docs as double)) AS hhi
 FROM s
 """,
@@ -2329,7 +2329,7 @@ def herfindahl_lang_source(spark, sf_dir):
         "source",
         "n_docs",
         "n_langs",
-        "sum_sq",
+        F.col("sum_sq").cast("long").alias("sum_sq"),
         (
             F.col("sum_sq").cast("double")
             / (F.col("n_docs").cast("double") * F.col("n_docs").cast("double"))
@@ -5175,7 +5175,7 @@ WITH toks AS (
   CROSS JOIN total t
   GROUP BY sw.source
 )
-SELECT source, num, den,
+SELECT source, cast(num as double) AS num, cast(den as double) AS den,
        cast(num as double) / cast(den as double) AS tvd_lower
 FROM terms ORDER BY source
 """,
@@ -5221,8 +5221,8 @@ def tvd_token_drift_sources(spark, sf_dir):
     )
     return terms.select(
         "source",
-        "num",
-        "den",
+        F.col("num").cast("double").alias("num"),
+        F.col("den").cast("double").alias("den"),
         (F.col("num").cast("double") / F.col("den").cast("double")).alias("tvd_lower"),
     ).orderBy("source")
 

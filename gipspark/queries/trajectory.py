@@ -302,7 +302,7 @@ def map_match_smooth_events(spark, sf_dir):
     probabilities, but the flicker rule is what correct 90%+ of real
     GPS jitter needs). One window shuffle on user_id after the narrow
     snap stage."""
-    from gipspark.operators.distance import nearest_edge_auto
+    from gipspark.operators.distance import nearest_edge
 
     ev = load(spark, sf_dir, "events")
     pts = ev.select(
@@ -312,7 +312,7 @@ def map_match_smooth_events(spark, sf_dir):
         C.derived_lat(F.col("event_id")).alias("lat"),
         C.derived_lon(F.col("event_id")).alias("lon"),
     )
-    ne = nearest_edge_auto(pts, ORACLE_POLYGONS, key_col="event_id").select(
+    ne = nearest_edge(pts, ORACLE_POLYGONS, key_col="event_id").select(
         "user_id", "ts", "event_id", F.col("nearest_poly").alias("raw_poly")
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -456,20 +456,16 @@ def _viterbi_oracle_sql() -> str:
     transliterated from operators/viterbi.py's NumPy DP. Verified
     bit-identical on all 10,000 (user, ping) rows (2 of which the DP
     genuinely corrects, so the path machinery is exercised)."""
-    from gipspark.operators.distance import _edge_rows
+    from gipspark.operators.distance import _polygon_edges, _proj_sql
     from gipspark.queries._base import ORACLE_POLYGONS
 
     lam = 2_000_000
     S = len(ORACLE_POLYGONS)
     vals = ", ".join(
         f"({pid}, {i}, {x1!r}, {y1!r}, {x2!r}, {y2!r})"
-        for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(ORACLE_POLYGONS))
+        for pid, i, x1, y1, x2, y2 in _polygon_edges(ORACLE_POLYGONS)
     )
-    t_expr = (
-        "greatest(0.0, least(1.0, "
-        "((lon - x1) * (x2 - x1) + (lat - y1) * (y2 - y1)) / "
-        "((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1))))"
-    )
+    t_expr, d2 = _proj_sql("lat", "lon")
     return f"""
 WITH RECURSIVE edges(poly_id, edge_idx, x1, y1, x2, y2) AS (VALUES {vals}),
 pts AS (
@@ -483,7 +479,7 @@ pts AS (
   FROM pts p CROSS JOIN edges e
 ), em0 AS (
   SELECT user_id, event_id, ts, poly_id,
-         min(cast(round(((lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)) * 1000000.0, 0) as bigint)) AS em
+         min(cast(round({d2} * 1000000.0, 0) as bigint)) AS em
   FROM proj GROUP BY user_id, event_id, ts, poly_id
 ), emv AS (
   SELECT user_id, event_id, ts,
@@ -1550,18 +1546,14 @@ def distance_approx_error_census(spark, sf_dir):
 
 
 def _ambiguity_oracle_sql() -> str:
-    from gipspark.operators.distance import _edge_rows
+    from gipspark.operators.distance import _polygon_edges, _proj_sql
     from gipspark.queries._base import ORACLE_POLYGONS
 
     vals = ", ".join(
         f"({pid}, {i}, {x1!r}, {y1!r}, {x2!r}, {y2!r})"
-        for i, (pid, x1, y1, x2, y2) in enumerate(_edge_rows(ORACLE_POLYGONS))
+        for pid, i, x1, y1, x2, y2 in _polygon_edges(ORACLE_POLYGONS)
     )
-    t_expr = (
-        "greatest(0.0, least(1.0, "
-        "((lon - x1) * (x2 - x1) + (lat - y1) * (y2 - y1)) / "
-        "((x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1))))"
-    )
+    t_expr, d2 = _proj_sql("lat", "lon")
     return f"""
 WITH edges(poly_id, edge_idx, x1, y1, x2, y2) AS (VALUES {vals}),
 pts AS (
@@ -1574,7 +1566,7 @@ pts AS (
   FROM pts p CROSS JOIN edges e
 ), em AS (
   SELECT event_id, poly_id,
-         min(cast(round(((lon - cx) * (lon - cx) + (lat - cy) * (lat - cy)) * 1000000.0, 0) as bigint)) AS ticks
+         min(cast(round({d2} * 1000000.0, 0) as bigint)) AS ticks
   FROM proj GROUP BY event_id, poly_id
 ), ranked AS (
   SELECT event_id, ticks,
@@ -1610,7 +1602,6 @@ def matching_ambiguity_census(spark, sf_dir):
     2-row-per-ping rank window keyed by event, one census agg."""
     from gipspark.operators.viterbi import _poly_ticks
     from gipspark.queries._base import ORACLE_POLYGONS
-    from gipspark.operators.distance import _edge_rows
 
     ev = load(spark, sf_dir, "events")
     pts = ev.select(
@@ -1622,7 +1613,7 @@ def matching_ambiguity_census(spark, sf_dir):
     em = F.array(
         *[
             F.struct(
-                _poly_ticks(F.col("lon"), F.col("lat"), _edge_rows([p])).alias("t"),
+                _poly_ticks(F.col("lon"), F.col("lat"), p).alias("t"),
                 F.lit(int(p["poly_id"])).alias("p"),
             )
             for p in polys

@@ -32,8 +32,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_COLS = ("run_id", "stage", "partition_id", "rows")
-
 
 class CheckpointedRun:
     def __init__(self, spark: SparkSession, root: str, run_id: str):

@@ -22,11 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -187,44 +185,6 @@ def polygons(n: int = 50) -> list[dict]:
             rings.append(np.vstack([hole, hole[:1]]))
         out.append({"poly_id": pid, "name": f"zone{pid}", "rings": [r_.tolist() for r_ in rings]})
     return out
-
-
-POLY_SCHEMA = StructType(
-    [
-        StructField("poly_id", LongType(), False),
-        StructField("name", StringType(), False),
-        # array of rings; ring = array of [lon, lat] pairs
-        StructField("rings", ArrayType(ArrayType(ArrayType(DoubleType())))),
-    ]
-)
-
-
-def polygons_df(spark: SparkSession, n: int = 50) -> DataFrame:
-    return spark.createDataFrame(
-        [(p["poly_id"], p["name"], p["rings"]) for p in polygons(n)], POLY_SCHEMA
-    )
-
-
-def tile_grid_df(spark: SparkSession) -> DataFrame:
-    """The full fixed 72×36 graticule as a small broadcastable dim table."""
-    rows = []
-    for ix in range(72):
-        for iy in range(36):
-            min_lon = -180.0 + ix * 5.0
-            max_lat = 90.0 - iy * 5.0
-            rows.append((f"h{ix:02d}v{iy:02d}", min_lon, max_lat - 5.0, min_lon + 5.0, max_lat))
-    return spark.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField("tile_id", StringType(), False),
-                StructField("min_lon", DoubleType(), False),
-                StructField("min_lat", DoubleType(), False),
-                StructField("max_lon", DoubleType(), False),
-                StructField("max_lat", DoubleType(), False),
-            ]
-        ),
-    )
 
 
 def raster_tile_pdf(tile_id: str, px: int) -> pd.DataFrame:

@@ -37,13 +37,15 @@ def attach(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
 
 
 def register_functions(spark: SparkSession) -> None:
-    from gipspark.functions.cells import TILE_SQL
+    from gipspark.functions.cells import CELL_LEVEL, TILE_SQL
     from gipspark.geo import h3x, s2
     from gipspark.geo.haversine import HAVERSINE_SQL
 
     @pandas_udf(LongType())
     def gp_s2_cell12(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(s2.latlng_to_cell(lat.to_numpy(float), lon.to_numpy(float), 12))
+        return pd.Series(
+            s2.latlng_to_cell(lat.to_numpy(float), lon.to_numpy(float), CELL_LEVEL)
+        )
 
     @pandas_udf(LongType())
     def gp_h3_cell7(lat: pd.Series, lon: pd.Series) -> pd.Series:

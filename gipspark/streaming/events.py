@@ -74,15 +74,6 @@ def windowed_counts(stream: DataFrame, window: str = "5 minutes", watermark: str
     )
 
 
-def sliding_user_counts(stream: DataFrame) -> DataFrame:
-    """Sliding windows (10 min window, 5 min slide) per user."""
-    return (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"), "user_id")
-        .count()
-    )
-
-
 def session_windows(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user: a session closes after ``gap`` idle."""
     return (

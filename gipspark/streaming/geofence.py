@@ -9,10 +9,12 @@ operator" shape (SURVEY.md §2.10).
 
 The inside test itself is operators.pip.ray_cast_inside, the pip
 refine's even-odd crossing fold, with the fence's edges inlined as a
-LITERAL array expression — fences are dim-sized, so each event's flags
-for all fences are pure whole-stage-codegen arithmetic: narrow, no
-join, no Python, exactly what a 10^12-event stream needs ahead of the
-single stateful shuffle on (user_id, poly_id).
+LITERAL array expression (operators.distance's edge list, the one
+pip_join refines against, open rings closed) — fences are dim-sized,
+so each event's flags for all fences are pure whole-stage-codegen
+arithmetic: narrow, no join, no Python, exactly what a 10^12-event
+stream needs ahead of the single stateful shuffle on (user_id,
+poly_id).
 
 State is one integer per (user, fence) key with event-time eviction 24h
 past the key's last fix (bounded state; same EventTimeTimeout choice as
@@ -36,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gipspark.operators.distance import _edge_array, _polygon_edges
 from gipspark.operators.pip import ray_cast_inside
 
 FENCE_STATE_SCHEMA = StructType([StructField("last_inside", IntegerType())])
@@ -51,25 +54,10 @@ FENCE_OUT_SCHEMA = StructType(
 )
 
 
-def _edge_lits(rings: list[list[list[float]]]) -> Column:
-    edges = []
-    for ring in rings:
-        for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
-            edges.append(
-                F.struct(
-                    F.lit(float(x1)).alias("x1"),
-                    F.lit(float(y1)).alias("y1"),
-                    F.lit(float(x2)).alias("x2"),
-                    F.lit(float(y2)).alias("y2"),
-                )
-            )
-    return F.array(*edges)
-
-
-def inside_flag(lat: Column, lon: Column, rings: list[list[list[float]]]) -> Column:
-    """Even-odd inside test against literal edges — the pip refine's
-    ray cast, zero joins."""
-    return ray_cast_inside(lon, lat, _edge_lits(rings)).cast("int")
+def inside_flag(lat: Column, lon: Column, poly: dict) -> Column:
+    """Even-odd inside test against the polygon's literal edge array —
+    the pip refine's ray cast, zero joins."""
+    return ray_cast_inside(lon, lat, _edge_array(_polygon_edges([poly]))).cast("int")
 
 
 def fence_flags(
@@ -92,7 +80,7 @@ def fence_flags(
                 *[
                     F.struct(
                         F.lit(int(p["poly_id"])).alias("poly_id"),
-                        inside_flag(la, lo, p["rings"]).alias("inside"),
+                        inside_flag(la, lo, p).alias("inside"),
                     )
                     for p in polys
                 ]

@@ -5,13 +5,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from gipspark.operators.distance import _edge_rows, nearest_edge
+from gipspark.operators.distance import _polygon_edges, nearest_edge
 from gipspark.queries import ORACLE_POLYGONS
 
 
 def _brute(px: float, py: float, edges) -> tuple[int, int]:
     best = (1 << 62, -1)
-    for pid, x1, y1, x2, y2 in edges:
+    for pid, _, x1, y1, x2, y2 in edges:
         dx, dy = x2 - x1, y2 - y1
         l2 = dx * dx + dy * dy
         t = max(0.0, min(1.0, ((px - x1) * dx + (py - y1) * dy) / l2))
@@ -36,7 +36,7 @@ def test_nearest_edge_matches_brute(spark):
         r.pid: (r.nearest_poly, r.d2_ticks)
         for r in nearest_edge(spark.createDataFrame(pdf), ORACLE_POLYGONS).collect()
     }
-    edges = _edge_rows(ORACLE_POLYGONS)
+    edges = _polygon_edges(ORACLE_POLYGONS)
     for _, row in pdf.iterrows():
         want_poly, want_ticks = _brute(row.lon, row.lat, edges)
         assert out[row.pid] == (want_poly, want_ticks), row.pid
@@ -64,6 +64,26 @@ def test_nearest_edge_partitioning_invariant(spark):
         for r in nearest_edge(df.repartition(13, "lat"), ORACLE_POLYGONS).collect()
     )
     assert a == b
+
+
+def test_open_ring_closing_edge_counts(spark):
+    """A ring given without its closing vertex is closed: the edge from
+    the last vertex back to the first counts in pip_join, nearest_edge
+    and snap_to_edge alike."""
+    from gipspark.operators.distance import snap_to_edge
+    from gipspark.operators.pip import pip_join
+
+    sq = [{"poly_id": 7, "rings": [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]]}]
+    # pid 1 sits just west of the closing edge x = 0, pid 2 inside
+    pts = spark.createDataFrame(
+        [(1, 5.0, -1.0), (2, 5.0, 5.0)], "pid long, lat double, lon double"
+    )
+    assert [r.pid for r in pip_join(pts, sq, level=6).collect()] == [2]
+    near = {r.pid: r for r in nearest_edge(pts, sq).collect()}
+    assert (near[1].nearest_poly, near[1].d2_ticks) == (7, 1_000_000)
+    snap = {r.pid: r for r in snap_to_edge(pts, sq).collect()}
+    assert (snap[1].edge_idx, snap[1].d2_ticks) == (3, 1_000_000)
+    assert (snap[1].snap_lon, snap[1].snap_lat) == (0.0, 5.0)
 
 
 def test_heatmap_smooth_conservation(spark):

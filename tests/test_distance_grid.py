@@ -10,13 +10,10 @@ import pytest
 
 from gipspark.operators.distance import (
     UNROLL_CAP,
-    _edge_rows,
+    _edge_grid,
+    _polygon_edges,
     nearest_edge,
-    nearest_edge_auto,
-    nearest_edge_grid,
     snap_to_edge,
-    snap_to_edge_auto,
-    snap_to_edge_grid,
 )
 from gipspark.queries import ORACLE_POLYGONS
 
@@ -38,10 +35,10 @@ def _brute(edges, lon, lat):
     """NumPy replay of the exact formula: clamp projection, round-half-up
     tick quantization, argmin by (ticks, poly, edge)."""
     pid = np.asarray([e[0] for e in edges], dtype=np.int64)
-    x1 = np.asarray([e[1] for e in edges])
-    y1 = np.asarray([e[2] for e in edges])
-    x2 = np.asarray([e[3] for e in edges])
-    y2 = np.asarray([e[4] for e in edges])
+    x1 = np.asarray([e[2] for e in edges])
+    y1 = np.asarray([e[3] for e in edges])
+    x2 = np.asarray([e[4] for e in edges])
+    y2 = np.asarray([e[5] for e in edges])
     dx, dy = x2 - x1, y2 - y1
     l2 = dx * dx + dy * dy
     t = np.maximum(0.0, np.minimum(1.0, ((lon - x1) * dx + (lat - y1) * dy) / l2))
@@ -66,12 +63,12 @@ def scattered_pts():
 
 
 def test_grid_matches_brute_on_big_coastline(spark, scattered_pts):
-    assert len(_edge_rows(BIG_LAYER)) >= 2000
-    edges = _edge_rows(BIG_LAYER)
+    edges = _polygon_edges(BIG_LAYER)
+    assert len(edges) >= 2000
     df = spark.createDataFrame(scattered_pts)
     res = {
         r.pt_id: r
-        for r in snap_to_edge_grid(df, BIG_LAYER, key_col="pt_id").collect()
+        for r in snap_to_edge(df, BIG_LAYER, key_col="pt_id").collect()
     }
     assert len(res) == len(scattered_pts)
     for _, p in scattered_pts.iterrows():
@@ -99,31 +96,29 @@ def test_grid_parity_with_least_tree_small_layer(spark):
     )
     grid = sorted(
         (r.pt_id, r.nearest_poly, r.edge_idx, r.d2_ticks, r.snap_lon, r.snap_lat)
-        for r in snap_to_edge_grid(df, ORACLE_POLYGONS, key_col="pt_id").collect()
+        for r in _edge_grid(df, _polygon_edges(ORACLE_POLYGONS), "pt_id").collect()
     )
     assert small == grid
     ne_small = sorted(
         (r.pt_id, r.nearest_poly, r.d2_ticks)
         for r in nearest_edge(df, ORACLE_POLYGONS).collect()
     )
-    ne_grid = sorted(
-        (r.pt_id, r.nearest_poly, r.d2_ticks)
-        for r in nearest_edge_grid(df, ORACLE_POLYGONS, key_col="pt_id").collect()
-    )
-    assert ne_small == ne_grid
+    assert ne_small == sorted((g[0], g[1], g[3]) for g in grid)
 
 
 def test_auto_dispatch(spark, scattered_pts):
     """Small layer → the narrow least-tree plan (no join in the plan);
     big layer → the grid path, no codegen failure at any size."""
     df = spark.createDataFrame(scattered_pts)
-    small = nearest_edge_auto(df, ORACLE_POLYGONS, key_col="pt_id")
+    small = nearest_edge(df, ORACLE_POLYGONS, key_col="pt_id")
     assert "Join" not in small._jdf.queryExecution().executedPlan().toString()
-    assert len(_edge_rows(BIG_LAYER)) > UNROLL_CAP
-    big = snap_to_edge_auto(df, BIG_LAYER, key_col="pt_id")
+    assert len(_polygon_edges(BIG_LAYER)) > UNROLL_CAP
+    big = snap_to_edge(df, BIG_LAYER, key_col="pt_id")
     assert big.count() == len(scattered_pts)
     cols = big.columns
     assert cols[-5:] == ["nearest_poly", "edge_idx", "d2_ticks", "snap_lon", "snap_lat"]
+    with pytest.raises(ValueError, match="key_col"):
+        nearest_edge(df, BIG_LAYER)
 
 
 def test_grid_partitioning_invariant(spark, scattered_pts):
@@ -132,11 +127,11 @@ def test_grid_partitioning_invariant(spark, scattered_pts):
     df = spark.createDataFrame(scattered_pts)
     a = sorted(
         (r.pt_id, r.nearest_poly, r.d2_ticks)
-        for r in nearest_edge_grid(df, BIG_LAYER, key_col="pt_id").collect()
+        for r in nearest_edge(df, BIG_LAYER, key_col="pt_id").collect()
     )
     b = sorted(
         (r.pt_id, r.nearest_poly, r.d2_ticks)
-        for r in nearest_edge_grid(
+        for r in nearest_edge(
             df.repartition(13, "lat"), BIG_LAYER, key_col="pt_id"
         ).collect()
     )

@@ -122,10 +122,12 @@ def test_knn_join_persists_nothing(spark):
     pts = _df(spark, np.arange(200), rng.uniform(-20, 20, 200), rng.uniform(-20, 20, 200), "p")
     qs = _df(spark, np.arange(5), rng.uniform(-20, 20, 5), rng.uniform(-20, 20, 5), "q")
     jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    before = set(jsc.getPersistentRDDs().keys())
     knn_join(qs, pts, k=4).collect()
     knn_join(qs, pts, k=4, level=12, max_rounds=1).collect()
-    assert jsc.getPersistentRDDs().size() == before
+    # compare ids, not counts: the ContextCleaner may unpersist an
+    # earlier test's garbage-collected RDD while these calls run
+    assert set(jsc.getPersistentRDDs().keys()) <= before
 
 
 def test_straggler_fallback_equals_brute(spark):

@@ -62,7 +62,7 @@ def test_morans_i_checkerboard_negative(spark):
 
 
 def test_snap_to_edge_vs_brute(spark):
-    from gipspark.operators.distance import snap_to_edge, _edge_rows
+    from gipspark.operators.distance import snap_to_edge, _polygon_edges
     from gipspark.queries import ORACLE_POLYGONS
 
     rng = random.Random(9)
@@ -75,10 +75,10 @@ def test_snap_to_edge_vs_brute(spark):
         for r in snap_to_edge(pts, ORACLE_POLYGONS).collect()
     }
 
-    edges = list(enumerate(_edge_rows(ORACLE_POLYGONS)))
+    edges = _polygon_edges(ORACLE_POLYGONS)
     for pid, lat, lon in rows:
         best = None
-        for idx, (pl, x1, y1, x2, y2) in edges:
+        for pl, idx, x1, y1, x2, y2 in edges:
             dx, dy = x2 - x1, y2 - y1
             t = max(0.0, min(1.0, ((lon - x1) * dx + (lat - y1) * dy) / (dx * dx + dy * dy)))
             cx, cy = x1 + t * dx, y1 + t * dy

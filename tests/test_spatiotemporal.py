@@ -75,9 +75,9 @@ def test_crossing_brute_force_random(spark):
     got = (
         segment_count(spark, rows)
     )
-    from gipspark.operators.distance import _edge_rows
+    from gipspark.operators.distance import _polygon_edges
 
-    edges = list(enumerate(_edge_rows(_unit_square())))
+    edges = _polygon_edges(_unit_square())
 
     def cross(ox, oy, ax, ay, bx, by):
         return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
@@ -89,7 +89,7 @@ def test_crossing_brute_force_random(spark):
     for fixes in by_user.values():
         fixes.sort()
         for (_, _, px, py), (_, _, qx, qy) in zip(fixes, fixes[1:]):
-            for _, (pid, x1, y1, x2, y2) in edges:
+            for pid, _, x1, y1, x2, y2 in edges:
                 d1 = cross(x1, y1, x2, y2, px, py)
                 d2 = cross(x1, y1, x2, y2, qx, qy)
                 d3 = cross(px, py, qx, qy, x1, y1)

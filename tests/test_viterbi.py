@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gipspark.operators.distance import _edge_rows
+from gipspark.operators.distance import _polygon_edges
 from gipspark.operators.viterbi import viterbi_match
 from gipspark.queries import ORACLE_POLYGONS
 
@@ -17,7 +17,7 @@ def _emissions(polys, lon, lat):
     out = []
     for p in sorted(polys, key=lambda q: int(q["poly_id"])):
         best = None
-        for _, x1, y1, x2, y2 in _edge_rows([p]):
+        for _, _, x1, y1, x2, y2 in _polygon_edges([p]):
             dx, dy = x2 - x1, y2 - y1
             t = max(0.0, min(1.0, ((lon - x1) * dx + (lat - y1) * dy) / (dx * dx + dy * dy)))
             cx, cy = x1 + t * dx, y1 + t * dy
