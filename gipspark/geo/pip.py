@@ -31,6 +31,22 @@ def rings_to_edges(rings: list[np.ndarray]) -> np.ndarray:
     return np.vstack(edges)
 
 
+def edge_crossings(lat: np.ndarray, edges: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(straddles, xcross), shape (n, m): does the eastward ray at each
+    of the n ``lat`` values straddle each of the m edges, and at which x
+    it meets the edge's line. An edge counts for a point at ``lon`` iff
+    ``straddles & (lon < xcross)``. The expression is the one of
+    operators.pip.ray_cast_inside and the oracle SQL, term for term, so
+    every engine computes the same doubles; xcross is meaningless where
+    the edge does not straddle."""
+    lat = np.asarray(lat, dtype=np.float64)[:, None]
+    x1, y1, x2, y2 = edges[:, 0][None], edges[:, 1][None], edges[:, 2][None], edges[:, 3][None]
+    straddles = (y1 > lat) != (y2 > lat)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xcross = (x2 - x1) * (lat - y1) / (y2 - y1) + x1
+    return straddles, xcross
+
+
 def points_in_polygon(lon: np.ndarray, lat: np.ndarray, edges: np.ndarray) -> np.ndarray:
     """Even-odd ray cast (eastward ray): bool mask (n,).
 
@@ -38,12 +54,8 @@ def points_in_polygon(lon: np.ndarray, lat: np.ndarray, edges: np.ndarray) -> np
         ((y1 > lat) != (y2 > lat)) AND
         (lon < (x2 - x1) * (lat - y1) / (y2 - y1) + x1)
     """
+    straddles, xcross = edge_crossings(lat, edges)
     lon = np.asarray(lon, dtype=np.float64)[:, None]
-    lat = np.asarray(lat, dtype=np.float64)[:, None]
-    x1, y1, x2, y2 = edges[:, 0][None], edges[:, 1][None], edges[:, 2][None], edges[:, 3][None]
-    straddles = (y1 > lat) != (y2 > lat)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xcross = (x2 - x1) * (lat - y1) / (y2 - y1) + x1
     crossings = (straddles & (lon < xcross)).sum(axis=1)
     return (crossings % 2) == 1
 

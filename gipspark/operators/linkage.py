@@ -52,6 +52,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# hot blocks routed by literal predicates; past it, by broadcast joins
+_HOT_LITERAL_MAX = 256
+
 
 def _seg_start(l: Column, i: int, k: int) -> Column:
     """1-based start of segment i when a length-l string splits into k
@@ -193,12 +196,12 @@ def fuzzy_self_join(
         .select("__stem", "__bkt")
     )
     # ADAPTIVE routing (driver-side, bounded — the skew.py hot-key
-    # contract): materialize the hot-key list once. In the common case
-    # it is EMPTY and the whole PassJoin leg (index/probe explodes, two
-    # dropDuplicates, a union) is omitted from the plan — at bench
-    # scale the always-present empty hot leg cost ~5× the join itself
-    # in pure stage-scheduling overhead.
-    hot_rows = hot_keys.collect()
+    # contract): materialize at most _HOT_LITERAL_MAX + 1 hot keys once.
+    # In the common case the list is EMPTY and the whole PassJoin leg
+    # (index/probe explodes, two dropDuplicates, a union) is omitted from
+    # the plan — at bench scale the always-present empty hot leg cost ~5×
+    # the join itself in pure stage-scheduling overhead.
+    hot_rows = hot_keys.limit(_HOT_LITERAL_MAX + 1).collect()
 
     def key(bkt: Column) -> Column:
         return F.concat(F.col("__stem"), F.lit("#"), bkt.cast("string"))
@@ -226,32 +229,29 @@ def fuzzy_self_join(
     if not hot_rows:
         return cold_pairs_of(b)
 
-    hot_set = {(r["__stem"], r["__bkt"]) for r in hot_rows}
-    hot_stems = sorted({s for s, _ in hot_set})
-    if len(hot_set) <= 256:
+    if len(hot_rows) <= _HOT_LITERAL_MAX:
         # small list → literal predicates (no join, no exchange)
+        hot_set = sorted((r["__stem"], r["__bkt"]) for r in hot_rows)
         is_hot = F.struct("__stem", "__bkt").isin(
-            [F.struct(F.lit(s), F.lit(k).cast("long")) for s, k in sorted(hot_set)]
+            [
+                F.struct(F.lit(s).alias("__stem"), F.lit(k).cast("long").alias("__bkt"))
+                for s, k in hot_set
+            ]
         )
         cold = b.filter(~is_hot)
         hot = b.filter(is_hot)
         # Only rows sharing a stem with some hot block can partner a
         # hot probe — prune the index side to those stems.
-        partners = b.filter(F.col("__stem").isin(hot_stems))
+        partners = b.filter(F.col("__stem").isin(sorted({s for s, _ in hot_set})))
     else:
         # a literal predicate this wide is the 64 KB-codegen trap all
-        # over again — route via broadcast joins instead (the list is
-        # already materialized, so the broadcast is driver-local)
-        hk = b.sparkSession.createDataFrame(
-            sorted(hot_set), "__stem string, __bkt long"
-        ).withColumn("__hot", F.lit(True))
-        b2 = b.join(F.broadcast(hk), ["__stem", "__bkt"], "left")
+        # over again, and the list was cut at the bound — route via
+        # broadcast joins of the hot-key frame itself instead
+        hk = F.broadcast(hot_keys.withColumn("__hot", F.lit(True)))
+        b2 = b.join(hk, ["__stem", "__bkt"], "left")
         cold = b2.filter(F.col("__hot").isNull()).drop("__hot")
         hot = b2.filter(F.col("__hot").isNotNull()).drop("__hot")
-        hs = b.sparkSession.createDataFrame(
-            [(s,) for s in hot_stems], "__stem string"
-        )
-        partners = b.join(F.broadcast(hs), "__stem")
+        partners = b.join(F.broadcast(hot_keys.select("__stem").distinct()), "__stem")
     cold_pairs = cold_pairs_of(cold)
 
     cand = _passjoin_candidates(hot, partners, max_dist)

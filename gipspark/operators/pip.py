@@ -46,7 +46,7 @@ EDGES_T = "array<struct<x1:double,y1:double,x2:double,y2:double>>"
 
 # LRU of driver-side covers keyed on (ring-bytes digest, level). Sized
 # above the largest zone pool a session reuses (perfbench zone_queries:
-# 1,500 pip zones + 100 zonal zones) so repeated zone sets always hit.
+# 1,500 zones) so repeated zone sets always hit.
 _COVER_CACHE_MAX = 4096
 _COVER_CACHE: OrderedDict[tuple[bytes, int], np.ndarray] = OrderedDict()
 

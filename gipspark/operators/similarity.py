@@ -226,7 +226,9 @@ def _pq_codebooks(
     """Per-subspace k-means codebooks on a bounded, deterministic
     driver-side sample of L2-NORMALIZED vectors (the _kmeans_centroids
     reservoir discipline: smallest xxhash64(id) rows, invariant to
-    partitioning). Returns (n_subs, n_codes, subdim)."""
+    partitioning). Returns (n_subs, min(n_codes, sample rows), subdim):
+    a sample smaller than ``n_codes`` gets only the codes it fills, so no
+    zero row can win an encode or LUT score."""
     rows = (
         corpus.select(c_vec, F.xxhash64(F.col(c_id)).alias("__h"))
         .orderBy("__h")
@@ -241,10 +243,10 @@ def _pq_codebooks(
         raise ValueError(f"dim {dim} not divisible into {n_subs} subspaces")
     sd = dim // n_subs
     rng = np.random.default_rng(seed)
-    books = np.zeros((n_subs, n_codes, sd))
+    books = np.empty((n_subs, min(n_codes, len(X)), sd))
     for s in range(n_subs):
         Xs = X[:, s * sd : (s + 1) * sd]
-        C = Xs[rng.choice(len(Xs), size=min(n_codes, len(Xs)), replace=False)]
+        C = Xs[rng.choice(len(Xs), size=books.shape[1], replace=False)]
         for _ in range(iters):
             d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
@@ -252,8 +254,19 @@ def _pq_codebooks(
                 m = assign == j
                 if m.any():
                     C[j] = Xs[m].mean(axis=0)
-        books[s, : len(C)] = C
+        books[s] = C
     return books
+
+
+def _pq_codes(X: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, n_subs) int32 nearest-codeword index per subspace of the
+    L2-normalized rows X: argmin |x−c|² as argmax (x·c − |c|²/2)."""
+    sd = B.shape[2]
+    c_half_sq = (B**2).sum(axis=2) / 2.0
+    codes = np.empty((len(X), len(B)), dtype=np.int32)
+    for s in range(len(B)):
+        codes[:, s] = (X[:, s * sd : (s + 1) * sd] @ B[s].T - c_half_sq[s]).argmax(axis=1)
+    return codes
 
 
 def pq_cosine_topk(
@@ -293,20 +306,13 @@ def pq_cosine_topk(
     from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
     B = _pq_codebooks(corpus, c_vec, c_id, n_subs, n_codes)
-    sd = B.shape[2]
-    # per-(subspace, code) squared norms for the argmin identity
-    # |x−c|² minimized == (x·c − |c|²/2) maximized
-    c_half_sq = (B**2).sum(axis=2) / 2.0  # (n_subs, n_codes)
+    _, n_codes, sd = B.shape
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def pq_encode(vecs: pd.Series) -> pd.Series:
         X = np.asarray(vecs.tolist(), dtype=np.float64)
         X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        codes = np.empty((len(X), n_subs), dtype=np.int32)
-        for s in range(n_subs):
-            scores = X[:, s * sd : (s + 1) * sd] @ B[s].T - c_half_sq[s]
-            codes[:, s] = scores.argmax(axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_pq_codes(X, B)))
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def pq_lut(vecs: pd.Series) -> pd.Series:
@@ -382,8 +388,7 @@ def ivfpq_cosine_topk(
 
     C = _kmeans_centroids(corpus, c_vec, n_centroids, c_id=c_id)
     B = _pq_codebooks(corpus, c_vec, c_id, n_subs, n_codes)
-    sd = B.shape[2]
-    c_half_sq = (B**2).sum(axis=2) / 2.0
+    _, n_codes, sd = B.shape
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def ivf_lists_and_codes(vecs: pd.Series) -> pd.Series:
@@ -392,10 +397,7 @@ def ivfpq_cosine_topk(
         X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
         out = np.empty((len(X), 1 + n_subs), dtype=np.int32)
         out[:, 0] = (X @ C.T).argmax(axis=1)
-        for s in range(n_subs):
-            out[:, 1 + s] = (
-                X[:, s * sd : (s + 1) * sd] @ B[s].T - c_half_sq[s]
-            ).argmax(axis=1)
+        out[:, 1:] = _pq_codes(X, B)
         return pd.Series(list(out))
 
     @F.pandas_udf(ArrayType(IntegerType()))

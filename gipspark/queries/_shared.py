@@ -165,8 +165,8 @@ def _zonal_raster_oracle_sql() -> str:
     VALUES tables (both sides derive from the same pure generators —
     fixtures.raster_tile_pdf / fixtures.polygons — so the doubles are
     bit-identical), then run the house even-odd ray-cast rule + stats.
-    This verifies the Spark zonal operator (cover prefilter + exact
-    refine + agg) against a prefilter-free SQL PIP."""
+    This verifies the Spark zonal operator (per-row x-runs joined on
+    lat + agg) against a per-pixel SQL PIP."""
     from gipspark.sources.fixtures import polygons as fixture_polygons
     from gipspark.sources.fixtures import raster_tile_pdf
 

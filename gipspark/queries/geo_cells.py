@@ -235,13 +235,13 @@ def kring_expansion(spark, sf_dir):
 def zonal_raster_stats(spark, sf_dir):
     """Raster↔vector zonal aggregation (gips_stats semantics). No driver
     table carries a raster, so the oracle bakes the same deterministic
-    pixel/polygon fixtures as VALUES and replays the house PIP rule
-    without the cell prefilter — checking cover+refine+agg end to end."""
+    pixel/polygon fixtures as VALUES and replays the house PIP rule per
+    pixel — checking the operator's x-run join + agg end to end."""
     from gipspark.operators.zonal import zonal_stats
     from gipspark.sources.fixtures import polygons, raster_cells_df
 
     raster = raster_cells_df(spark, _RASTER_TILES, px=_RASTER_PX)
-    out = zonal_stats(raster, polygons(10), level=9)
+    out = zonal_stats(raster, polygons(10))
     return out.select(
         "poly_id",
         "px_count",

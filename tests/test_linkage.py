@@ -185,10 +185,11 @@ def test_tiny_strings_pigeonhole_fallback(spark):
     assert got == _brute(rows, 2, lambda t: "s")
 
 
-def test_many_hot_blocks_fallback_branch(spark):
+def test_many_hot_blocks_fallback_branch(spark, monkeypatch):
     """>256 hot blocks routes through the broadcast-join fallback (the
     literal-predicate form would rebuild the 64 KB codegen trap); the
-    result must still match the brute reference on a probe block."""
+    result must still match the brute reference on a probe block, and
+    the driver sees at most 257 of the 300 hot keys."""
     import itertools
 
     from pyspark.sql import functions as F
@@ -202,12 +203,23 @@ def test_many_hot_blocks_fallback_branch(spark):
             rows.append((did, f"stem{s:03d}-{i % 9}x"))
             did += 1
     df = spark.createDataFrame(rows, "doc_id long, title string")
+    collected = []
+    collect = type(df).collect
+
+    def counting_collect(self):
+        got = collect(self)
+        collected.append(len(got))
+        return got
+
+    monkeypatch.setattr(type(df), "collect", counting_collect)
     out = fuzzy_self_join(
         df,
         stem=F.regexp_replace(F.col("title"), F.lit("-[a-z0-9]+$"), F.lit("")),
         max_dist=2,
         hot_threshold=64,
     )
+    monkeypatch.undo()
+    assert collected and max(collected) <= 257
 
     def lev(a, b):
         import functools

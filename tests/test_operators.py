@@ -363,6 +363,24 @@ def test_pq_rejects_dim_not_divisible_into_subspaces(spark):
         pq_cosine_topk(q, df, k=1, n_subs=2)
 
 
+def test_pq_codes_never_pick_an_unfilled_codeword(spark):
+    """A sample smaller than n_codes fills only that many codewords. A
+    vector far from all of them scores below zero on every one, and must
+    still get its nearest real codeword, not an all-zero filler row."""
+    import numpy as np
+
+    from gipspark.operators.similarity import _pq_codebooks, _pq_codes
+
+    ang = np.radians(np.arange(6) * 10.0)  # six unit vectors within 50°
+    rows = [(i, [float(np.cos(a)), float(np.sin(a))]) for i, a in enumerate(ang)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    B = _pq_codebooks(df, "embedding", "vec_id", n_subs=1, n_codes=8, sample=3)
+    real = B[0, :3]  # the codewords the sample filled
+    X = -real / np.linalg.norm(real, axis=1, keepdims=True)  # opposite each one
+    nearest = ((X[:, None, :] - real[None]) ** 2).sum(axis=2).argmin(axis=1)
+    assert _pq_codes(X, B)[:, 0].tolist() == nearest.tolist()
+
+
 def test_pq_invariant_to_partitioning(spark):
     from gipspark.operators.similarity import pq_cosine_topk
 
