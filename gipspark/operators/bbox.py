@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gipspark.functions.cells import TILE_DEG, tile_of
+from gipspark.session import local_frame
 
 
 def _tile_cover(box: dict) -> list[str]:
@@ -49,11 +50,13 @@ def bbox_join(
     spark = points.sparkSession
     if len({b["box_id"] for b in boxes}) != len(boxes):
         raise ValueError("bbox_join: box_id values must be unique")
-    cover = spark.createDataFrame(
+    cover = local_frame(
+        spark,
         [(b["box_id"], t) for b in boxes for t in _tile_cover(b)],
         "box_id int, __tile string",
     )
-    dims = spark.createDataFrame(
+    dims = local_frame(
+        spark,
         [
             (b["box_id"], b["lon_min"], b["lat_min"], b["lon_max"], b["lat_max"])
             for b in boxes

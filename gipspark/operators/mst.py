@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gipspark.operators.components import connected_components
+from gipspark.session import local_frame
 
 
 def boruvka_mst(
@@ -99,5 +100,5 @@ def boruvka_mst(
         raise RuntimeError(f"boruvka_mst: not converged after {max_rounds} rounds")
     ed.unpersist()
     if out is None:
-        return edges.sparkSession.createDataFrame([], "a long, b long, w long")
+        return local_frame(edges.sparkSession, [], "a long, b long, w long")
     return out

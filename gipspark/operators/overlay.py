@@ -48,6 +48,7 @@ from gipspark.operators.pip import (
     polygon_covers,
     ray_cast_inside,
 )
+from gipspark.session import local_frame
 
 
 def _side_dfs(
@@ -74,7 +75,8 @@ def _side_dfs(
         )
         for p in polys
     ]
-    shape = spark.createDataFrame(
+    shape = local_frame(
+        spark,
         shape_rows,
         f"{prefix}_id long, {prefix}_edges {EDGES_T}, {prefix}_vx double, {prefix}_vy double",
     )

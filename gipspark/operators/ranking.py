@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gipspark.session import local_frame
+
 
 def global_row_number(
     df: DataFrame,
@@ -63,8 +65,10 @@ def global_row_number(
         offsets[r["__pid"]] = acc
         acc += r["c"]
     off_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "__pid int, __off bigint"
+        local_frame(
+            df.sparkSession,
+            [(int(p), int(o)) for p, o in offsets.items()],
+            "__pid int, __off bigint",
         )
     )
     w = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in order_cols])
@@ -127,8 +131,10 @@ def global_cumsum(
         offsets[r["__pid"]] = acc
         acc += r["s"]
     off_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "__pid int, __off bigint"
+        local_frame(
+            df.sparkSession,
+            [(int(p), int(o)) for p, o in offsets.items()],
+            "__pid int, __off bigint",
         )
     )
     w = (

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gipspark.session import local_frame
+
 
 def khop_cheapest(
     edges: DataFrame,
@@ -38,7 +40,7 @@ def khop_cheapest(
     (bounded by ``max_rounds``, raising on non-convergence — the
     components.py contract)."""
     spark = edges.sparkSession
-    dist = spark.createDataFrame([(int(source), 0)], "node long, dist long")
+    dist = local_frame(spark, [(int(source), 0)], "node long, dist long")
     rounds = max_rounds if converge else k
     for r in range(rounds):
         relaxed = (

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 
 from gipspark.functions.text import extract_text_series
+from gipspark.session import local_frame
 
 SEED = 7
 DOC_SCHEMA = StructType(
@@ -219,8 +220,9 @@ def raster_cells_df(
     """Raster-as-table: px×px pixels per tile, value = seeded smooth
     field f(lon, lat) + deterministic noise (FIXTURES.md §1.4)."""
     parts = partitions or spark.sparkContext.defaultParallelism
-    tile_arr = [(t,) for t in tiles]
-    tiles_df = spark.createDataFrame(tile_arr, StructType([StructField("tile_id", StringType())]))
+    tiles_df = local_frame(
+        spark, [(t,) for t in tiles], StructType([StructField("tile_id", StringType())])
+    )
 
     schema = StructType(
         [
