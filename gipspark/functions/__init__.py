@@ -7,9 +7,10 @@ Three families, split by where they execute:
   enrich pass runs them in one fused ``mapInPandas``),
   plus JVM-side text-analysis Columns (token counts, quality, lang-id,
   fingerprints) that never leave whole-stage codegen.
-- :mod:`gipspark.functions.cells` — S2/H3 cell indexing pandas UDFs over
-  the vendored NumPy kernels, and the JVM-side S2 parent and GIPS-style
-  graticule tile id.
+- :mod:`gipspark.functions.cells` — the JVM-side S2 encode
+  (``with_s2_cell``), S2 parent and GIPS-style graticule tile id, plus
+  H3 encode, k-ring and cell-center pandas UDFs over the vendored NumPy
+  kernels.
 - :mod:`gipspark.functions.vectors` — embedding similarity expressions
   (dot/cosine) built from higher-order functions, JVM-side.
 
@@ -21,10 +22,10 @@ from gipspark.functions.cells import (  # noqa: F401
     cell_center_latlng,
     h3_cell,
     kring,
-    s2_cell,
     s2_parent,
     tile_of,
     TILE_SQL,
+    with_s2_cell,
 )
 from gipspark.functions.text import (  # noqa: F401
     doc_fingerprint,

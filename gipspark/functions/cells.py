@@ -1,9 +1,14 @@
 """Spatial cell-index Columns: S2 / H3 encodes, k-rings, GIPS-style tiles.
 
 The encode path is the engine's hottest per-row operation at 10^12 docs
-(BASELINE.json:2 "H3-encode + PIP-join + tile-assign"), so it is a
-vectorized pandas/Arrow UDF over the pure-NumPy kernels in
-:mod:`gipspark.geo` — one Arrow batch crossing per ~64k rows, zero
+(BASELINE.json:2 "H3-encode + PIP-join + tile-assign"). The S2 encode
+operators run (:func:`with_s2_cell`) is Catalyst arithmetic that copies
+:func:`gipspark.geo.s2.latlng_to_cell` step by step, bit for bit, so it
+stays inside whole-stage codegen and starts no Python worker. The NumPy
+kernel itself serves driver-side work (covers, query rings) and the
+enrich stage's fused pass. H3, the k-ring and the cell center remain
+vectorized pandas/Arrow UDFs over the NumPy kernels in
+:mod:`gipspark.geo`: one Arrow batch crossing per ~64k rows, zero
 per-row Python (BASELINE.json:15).
 
 The GIPS-style *tile* (the fixed 5°×5° h##v## graticule, upstream-GIPS
@@ -14,9 +19,12 @@ textually-mirrored DuckDB template (TILE_SQL) for the oracle harness.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
@@ -29,27 +37,111 @@ from gipspark.geo import h3x, s2
 CELL_LEVEL = 12
 
 # ---------------------------------------------------------------------------
-# encodes (pandas/Arrow UDFs over the NumPy kernels)
+# S2 encode (JVM: Catalyst arithmetic, whole-stage codegen)
 # ---------------------------------------------------------------------------
 
 
-def s2_cell(lat: Column, lon: Column, level: int = CELL_LEVEL) -> Column:
-    """S2 cell id (int64) at ``level`` — the engine's primary index."""
+@functools.lru_cache(maxsize=1)
+def _lookup_pos(gateway) -> Column:
+    """geo.s2's Hilbert table as one array literal, built once per JVM
+    ``gateway`` (it takes ~1,000 py4j calls). ``F.lit(list)`` would plan
+    a CreateArray instead, which a projection over a LocalRelation
+    rebuilds for every row (ConvertToLocalRelation evaluates it without
+    codegen)."""
+    return F.lit(s2.LOOKUP_POS.astype(np.int64))
 
-    @pandas_udf(LongType())
-    def _enc(la: pd.Series, lo: pd.Series) -> pd.Series:
-        out = np.full(len(la), -1, dtype=np.int64)
-        m = la.notna().to_numpy() & lo.notna().to_numpy()
-        if m.any():
-            out[m] = s2.latlng_to_cell(
-                la.to_numpy(np.float64, na_value=np.nan)[m],
-                lo.to_numpy(np.float64, na_value=np.nan)[m],
-                level,
-            )
-        res = pd.Series(out)
-        return res.where(pd.Series(m), other=pd.NA)
 
-    return _enc(lat, lon)
+def with_s2_cell(
+    df: DataFrame,
+    lat: str | Column,
+    lon: str | Column,
+    level: int = CELL_LEVEL,
+    name: str = "cell",
+) -> DataFrame:
+    """``df`` plus (or with a replaced) column ``name``: the S2 cell id
+    (int64) at ``level`` of each (lat, lon) in degrees, equal bit for bit
+    to :func:`gipspark.geo.s2.latlng_to_cell`. A null or NaN coordinate
+    gives a null cell.
+
+    Each step of ``latlng_to_cell`` is the same double expression in
+    the same order, so the JVM rounds as NumPy does. The steps are four
+    projections (xyz; face; i, j; cell) rather than one Column: a Column
+    copies every operand it reuses, and the whole encode nested in one
+    expression grows too large to compile.
+    """
+    la = F.col(lat) if isinstance(lat, str) else lat
+    lo = F.col(lon) if isinstance(lon, str) else lon
+    names = [f"`{c}`" for c in df.columns if c != name]
+    # degrees -> unit-sphere xyz (latlng_to_xyz); NaN turns null here
+    null = F.lit(None).cast("double")
+    rad_la = F.radians(F.nanvl(la.cast("double"), null))
+    rad_lo = F.radians(F.nanvl(lo.cast("double"), null))
+    xyz = df.select(
+        *names,
+        (F.cos(rad_la) * F.cos(rad_lo)).alias("__s2_x"),
+        (F.cos(rad_la) * F.sin(rad_lo)).alias("__s2_y"),
+        F.sin(rad_la).alias("__s2_z"),
+    )
+    # cube face with xyz_to_face_uv's >= ties, then u and v as one
+    # numerator over the major axis, the quadratic st and the clamped
+    # 30-bit leaf coordinates (uv_to_st, st_to_ij)
+    face = xyz.selectExpr(
+        "*",
+        """CASE WHEN __s2_x IS NULL THEN NULL
+                WHEN abs(__s2_x) >= abs(__s2_y)
+                     THEN IF(abs(__s2_x) >= abs(__s2_z), IF(__s2_x < 0, 3, 0), IF(__s2_z < 0, 5, 2))
+                ELSE IF(abs(__s2_y) >= abs(__s2_z), IF(__s2_y < 0, 4, 1), IF(__s2_z < 0, 5, 2))
+           END AS __s2_face""",
+    )
+
+    def leaf_coord(num: str) -> str:
+        uv = f"({num}) / CASE __s2_face % 3 WHEN 0 THEN __s2_x WHEN 1 THEN __s2_y ELSE __s2_z END"
+        r = f"0.5D * sqrt(1.0D + 3.0D * abs({uv}))"
+        st = f"IF({uv} >= 0.0D, {r}, 1.0D - {r})"
+        return f"least(greatest(floor(1073741824.0D * {st}), 0L), 1073741823L)"
+
+    fij = face.selectExpr(
+        *names,
+        "__s2_face",
+        leaf_coord(
+            "CASE __s2_face WHEN 0 THEN __s2_y WHEN 1 THEN -__s2_x WHEN 2 THEN -__s2_x "
+            "WHEN 3 THEN __s2_z WHEN 4 THEN __s2_z ELSE -__s2_y END"
+        )
+        + " AS __s2_i",
+        leaf_coord(
+            "CASE __s2_face WHEN 0 THEN __s2_z WHEN 1 THEN __s2_z WHEN 2 THEN -__s2_y "
+            "WHEN 3 THEN __s2_y ELSE -__s2_x END"
+        )
+        + " AS __s2_j",
+    )
+    # from_face_ij's LOOKUP_POS steps. Step k writes position bits
+    # [8k, 8k+8); a level-L cell keeps bits [60-2L, 60), so the steps
+    # stop at the last k that reaches them and the parent mask clears
+    # the rest. The table holds longs: Java shifts an int modulo 32.
+    lookup = _lookup_pos(SparkContext._gateway)
+    i, j = F.col("__s2_i"), F.col("__s2_j")
+    n = F.col("__s2_face").cast("long")
+    bits = n.bitwiseAND(F.lit(s2.SWAP_MASK))
+    n = F.shiftleft(n, 60)
+    for k in range(7, max(0, (52 - 2 * level) // 8 + 1) - 1, -1):
+        idx = (
+            F.shiftleft(F.shiftright(i, 4 * k).bitwiseAND(F.lit(15)), 6)
+            .bitwiseOR(F.shiftleft(F.shiftright(j, 4 * k).bitwiseAND(F.lit(15)), 2))
+            .bitwiseOR(bits)
+        )
+        val = F.get(lookup, idx.cast("int"))
+        n = n.bitwiseOR(F.shiftleft(F.shiftright(val, 2), 8 * k))
+        bits = val.bitwiseAND(F.lit(3))
+    leaf = F.shiftleft(n, 1).bitwiseOR(F.lit(1))
+    cell = fij.select(*names, s2_parent(leaf, level).alias("__s2_cell"))
+    # the cell leaves through a one-row explode: the optimizer pushes a
+    # filter on a Project's output down through it by inlining the
+    # column's expression, and a filter on the cell (a join infers
+    # ``isnotnull``) would then inline all four stages into one
+    # predicate that encodes every row a second time, outside codegen's
+    # common-subexpression elimination. No filter on a generated column
+    # passes a Generate.
+    return cell.select(*names, F.explode(F.array("__s2_cell")).alias(name))
 
 
 def h3_cell(lat: Column, lon: Column, res: int = 7) -> Column:

@@ -2,8 +2,9 @@
 
 north_star: "k-ring-expansion kNN" (BASELINE.json:6). Shape:
 
-- the points carry an S2 cell at a coarse ``level``; queries with a
-  null coordinate are dropped, as an inner join on a null key would
+- the points carry an S2 cell at a coarse ``level``, encoded in the
+  JVM by ``with_s2_cell`` inside the scan's codegen stage; queries with
+  a null coordinate are dropped, as an inner join on a null key would
   drop them;
 - round ``r``: each live query's radius-r adjacency ball
   (geo.s2.grid_disk — exact BFS across cube-face seams) is joined to
@@ -23,11 +24,13 @@ the small build side of a hash join: it is collected once, its balls
 are built with the NumPy kernels and broadcast, the point side is
 scanned in place and never shuffled, each round returns ≤ k rows per
 live query to the driver, and the result is a local relation with
-nothing persisted. Past that (self-joins, whole-table query sides)
-the balls come from the kring UDF and shuffle-join on cell; each
-round's candidates are materialised once, the result is checkpointed
-once, and the per-round frames are unpersisted before the call
-returns — the driver sees counts, never rows.
+nothing persisted; no Python worker runs. Past that (self-joins,
+whole-table query sides) the query cells are encoded in the JVM too,
+the balls come from the kring pandas UDF (the plan's only Python) and
+shuffle-join on cell; each round's candidates are materialised once,
+the result is checkpointed once, and the per-round frames are
+unpersisted before the call returns — the driver sees counts, never
+rows.
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from gipspark.functions.cells import kring, s2_cell
+from gipspark.functions.cells import kring, with_s2_cell
 from gipspark.geo import s2
 from gipspark.geo.haversine import haversine_col
 
@@ -140,7 +143,7 @@ def knn_join(
     pts = points.select(p_id, p_lat, p_lon).where(
         F.col(p_lat).isNotNull() & F.col(p_lon).isNotNull()
     )
-    pts_at_level = pts.withColumn("__pcell", s2_cell(F.col(p_lat), F.col(p_lon), level))
+    pts_at_level = with_s2_cell(pts, p_lat, p_lon, level, "__pcell")
     w = Window.partitionBy(q_id).orderBy(F.col("dist_m").asc(), F.col(p_id).asc())
 
     def top_k(ring: DataFrame) -> DataFrame:
@@ -201,10 +204,11 @@ def knn_join(
 def _rounds_in_spark(qs, top_k, brute, level, k, max_rounds, q_id, q_lat, q_lon) -> DataFrame:
     """knn_join's rounds for a query side too large for the driver.
 
-    The balls come from the ``kring`` UDF and are shuffle-joined on
-    cell. Each round's candidates, flagged settled or not by a window
-    over the query, are persisted and materialised by the round's one
-    action (the settled-query count). The union of the settled rows is
+    The query cells come from ``with_s2_cell``, the balls from the
+    ``kring`` UDF, and they are shuffle-joined on cell. Each round's
+    candidates, flagged settled or not by a window over the query, are
+    persisted and materialised by the round's one action (the
+    settled-query count). The union of the settled rows is
     checkpointed before the ``finally`` unpersists every frame the loop
     persisted, so the returned frame reads its own blocks and the cache
     keeps no entry of this call.
@@ -213,7 +217,7 @@ def _rounds_in_spark(qs, top_k, brute, level, k, max_rounds, q_id, q_lat, q_lon)
     by_q = Window.partitionBy(q_id)
     held: list[DataFrame] = []
     try:
-        live = qs.withColumn("__qcell", s2_cell(F.col(q_lat), F.col(q_lon), level)).persist()
+        live = with_s2_cell(qs, q_lat, q_lon, level, "__qcell").persist()
         held.append(live)
         n_live = live.count()
         parts: list[DataFrame] = []
@@ -259,10 +263,10 @@ def within_join(
     haversine distance is ≤ ``radius_m`` meters.
 
     Scale shape (north_star spatial-join family, BASELINE.json:6): both
-    sides are S2-encoded at ``level``; the left side explodes the
-    lattice disk of radius ``r`` cells and equi-joins the right side on
-    cell — one shuffle on cell ids, candidate volume bounded by disk
-    occupancy, never a cross join. Exactness: a point outside the
+    sides are S2-encoded at ``level`` in the JVM (``with_s2_cell``); the
+    left side explodes the lattice disk of radius ``r`` cells and
+    equi-joins the right side on cell — one shuffle on cell ids,
+    candidate volume bounded by disk occupancy, never a cross join. Exactness: a point outside the
     radius-``r`` disk is separated from the query cell by ≥ r
     conservative cell widths (see :func:`_min_cell_width_m`), so with
     r·min_width > radius_m no qualifying pair can escape the prefilter.
@@ -285,18 +289,8 @@ def within_join(
     # boundary case (dist exactly r·min_width) cannot sit outside the disk
     r = int(math.floor(radius_m / _min_cell_width_m(level))) + 1
 
-    rt = right.select(
-        F.col(r_id),
-        F.col(r_lat),
-        F.col(r_lon),
-        s2_cell(F.col(r_lat), F.col(r_lon), level).alias("__cell"),
-    )
-    lt = left.select(
-        F.col(l_id),
-        F.col(l_lat),
-        F.col(l_lon),
-        s2_cell(F.col(l_lat), F.col(l_lon), level).alias("__lcell"),
-    )
+    rt = with_s2_cell(right.select(r_id, r_lat, r_lon), r_lat, r_lon, level, "__cell")
+    lt = with_s2_cell(left.select(l_id, l_lat, l_lon), l_lat, l_lon, level, "__lcell")
     return (
         lt.withColumn("__ring", kring(F.col("__lcell"), level, r))
         .select(l_id, l_lat, l_lon, F.explode("__ring").alias("__cell"))

@@ -10,7 +10,8 @@ Shapely-prepared polygon partitions)"). Spark-first shape:
    equi-joins on its cell id, so the 10^12-row scan never shuffles for
    this join. With ``cell_col`` (the pipeline's encode-once cell) the
    probe is pure JVM bit arithmetic (``s2_parent``); without it the
-   points pass once through the pandas-UDF ``s2_cell``.
+   points are encoded once by ``with_s2_cell``, Catalyst arithmetic in
+   the same codegen stage. Neither path starts a Python worker.
 2. **Refine** (JVM, no Python): candidate (point, poly) pairs run the
    exact even-odd ray cast of gipspark.geo.pip as a whole-stage-codegen
    ``aggregate`` fold (:func:`ray_cast_inside`) over the polygon's edge
@@ -43,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from gipspark.functions.cells import CELL_LEVEL, s2_cell, s2_parent
+from gipspark.functions.cells import CELL_LEVEL, s2_parent, with_s2_cell
 from gipspark.geo import pip as pipgeo
 from gipspark.operators.distance import _polygon_edges
 from gipspark.session import local_frame
@@ -179,20 +180,19 @@ def pip_join(
         )
         groups.setdefault(lvl, []).append(p)
 
-    # ONE pandas-UDF encode at the finest needed level; each point then
-    # explodes into its parent cell at every active cover level
-    # (s2_parent, pure JVM bitwise arithmetic) and ONE broadcast
-    # equi-join probes the combined multi-level cover (cell ids
-    # self-describe their level, so there are no cross-level
-    # collisions). Single branch, single Python pass, |levels|× probe
-    # amplification, no shuffle.
+    # ONE encode at the finest needed level; each point then explodes
+    # into its parent cell at every active cover level (s2_parent, pure
+    # JVM bitwise arithmetic) and ONE broadcast equi-join probes the
+    # combined multi-level cover (cell ids self-describe their level, so
+    # there are no cross-level collisions). Single branch, |levels|×
+    # probe amplification, no shuffle.
     finest = max(groups)
     pts = points
     if cell_col is not None and CELL_LEVEL >= finest:
         base, base_lvl = cell_col, CELL_LEVEL
     else:
         base, base_lvl = "__cellbase", finest
-        pts = pts.withColumn(base, s2_cell(F.col(lat_col), F.col(lon_col), finest))
+        pts = with_s2_cell(pts, lat_col, lon_col, finest, base)
 
     def parent_expr(lvl: int):
         return F.col(base) if lvl == base_lvl else s2_parent(F.col(base), lvl)

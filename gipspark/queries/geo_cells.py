@@ -196,7 +196,7 @@ def geohash_encode_customers(spark, sf_dir):
 def s2_cell_counts(spark, sf_dir):
     pts = _cust_pts(spark, sf_dir)
     return (
-        pts.withColumn("cell", C.s2_cell(F.col("lat"), F.col("lon"), 12))
+        C.with_s2_cell(pts, "lat", "lon", 12, "cell")
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
         .orderBy(F.col("n").desc(), F.col("cell").asc())
@@ -221,7 +221,7 @@ def h3_cell_counts(spark, sf_dir):
 @register("kring_expansion", None)
 def kring_expansion(spark, sf_dir):
     pts = _cust_pts(spark, sf_dir).filter(F.col("c_custkey") < 50)
-    cells = pts.withColumn("cell", C.s2_cell(F.col("lat"), F.col("lon"), 10))
+    cells = C.with_s2_cell(pts, "lat", "lon", 10, "cell")
     return (
         cells.withColumn("ring", C.kring(F.col("cell"), 10, 2))
         .select("c_custkey", "cell", F.explode("ring").alias("neighbor"))

@@ -1,9 +1,11 @@
 """Adversarial kNN configurations: the guarantee loop must equal brute
 force regardless of point distribution, seams, or parameter corners."""
 
+import re
 from unittest import mock
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -190,3 +192,73 @@ def test_within_join_equals_brute(spark, radius_km, level):
         for r in within_join(lt, rt, radius_m=radius, level=level).collect()
     }
     assert fast == _within_brute(spark, lt, rt, radius)
+
+
+# the Python plan nodes test_zonal_plan_runs_no_python forbids
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow", "PythonUDF")
+
+
+def _executed_plans(spark, action):
+    """Run ``action`` and return the physical plan of every SQL query it
+    executed, from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty(60_000)
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = {e.executionId() for e in executions()}
+    action()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() not in seen]
+
+
+def _python_udfs(plan):
+    """Names of the Python UDFs a formatted plan evaluates."""
+    return set(re.findall(r"ArrowEvalPython\nInput \[\d+\]: \[.*\]\nArguments: \[(\w+)\(", plan))
+
+
+def test_encodes_run_no_python(spark, tmp_path):
+    """No operator encodes S2 cells in a Python worker. knn_join with the
+    query side on the driver, and pip_join without ``cell_col``, run no
+    Python node at all; knn_join's rounds in Spark and within_join still
+    explode balls with the ``kring`` pandas UDF, and with nothing else."""
+    from gipspark.operators import knn
+    from gipspark.operators.pip import pip_join
+
+    rng = np.random.default_rng(8)
+    for side, n in (("p", 2000), ("q", 30)):
+        coords = rng.uniform(-5, 5, (2, n))
+        pd.DataFrame(
+            {f"{side}_id": np.arange(n), f"{side}_lat": coords[0], f"{side}_lon": coords[1]}
+        ).to_parquet(tmp_path / f"{side}.parquet")
+    pts = spark.read.parquet(str(tmp_path / "p.parquet"))
+    qs = spark.read.parquet(str(tmp_path / "q.parquet"))
+    square = [[-2.0, -2.0], [2.0, -2.0], [2.0, 2.0], [-2.0, 2.0], [-2.0, -2.0]]
+    runs = {
+        "knn driver": (lambda: knn.knn_join(qs, pts, k=3).collect(), set()),
+        "pip_join": (
+            lambda: pip_join(
+                pts, [{"poly_id": 1, "rings": [square]}], lat_col="p_lat", lon_col="p_lon"
+            ).collect(),
+            set(),
+        ),
+        "within_join": (
+            lambda: knn.within_join(
+                qs.toDF("l_id", "l_lat", "l_lon"), pts.toDF("r_id", "r_lat", "r_lon"), 50_000.0
+            ).collect(),
+            {"_ring"},
+        ),
+    }
+    for name, (action, allowed) in runs.items():
+        plans = _executed_plans(spark, action)
+        assert plans, name
+        for plan in plans:
+            assert _python_udfs(plan) <= allowed, (name, _python_udfs(plan))
+            nodes = [node for node in PYTHON_NODES if node in plan]
+            assert nodes == (["ArrowEvalPython"] if _python_udfs(plan) else []), (name, nodes)
+    with mock.patch.object(knn, "_DRIVER_MAX_QUERIES", 0):
+        plans = _executed_plans(spark, lambda: knn.knn_join(qs, pts, k=3).collect())
+    assert any("_ring" in _python_udfs(p) for p in plans)
+    assert all(_python_udfs(p) <= {"_ring"} for p in plans)

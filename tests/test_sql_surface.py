@@ -10,8 +10,8 @@ from gipspark.functions.cells import (
     LON_MUL,
     derived_lat,
     derived_lon,
-    s2_cell,
     tile_of,
+    with_s2_cell,
 )
 from gipspark.sql import attach
 
@@ -60,12 +60,11 @@ def test_sql_s2_encode_matches_column_kernel(spark, sf_dir):
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(F.col("c_custkey") <= 200)
     want = {
         (r.c_custkey, r.cell)
-        for r in cust.select(
-            "c_custkey",
-            s2_cell(derived_lat(F.col("c_custkey")), derived_lon(F.col("c_custkey")), 12).alias(
-                "cell"
-            ),
-        ).collect()
+        for r in with_s2_cell(
+            cust, derived_lat(F.col("c_custkey")), derived_lon(F.col("c_custkey")), 12, "cell"
+        )
+        .select("c_custkey", "cell")
+        .collect()
     }
     assert got == want and len(got) >= 100
 

@@ -29,9 +29,8 @@ RULES = {
     "q3_top_orders": ([r"BroadcastHashJoin|broadcast", r"TakeOrderedAndProject"], [r"CartesianProduct"]),
     "q5_local_supplier_volume": ([r"BroadcastHashJoin", r"PushedFilters: \[IsNotNull\(r_name\), EqualTo\(r_name,ASIA\)"], [r"CartesianProduct", r"ArrowEvalPython"]),
     "broadcast_dim_join": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"CartesianProduct"]),
-    # NB: one ArrowEvalPython IS expected here — the s2_cell encode
-    # (contractual pandas UDF); the ray-cast refine itself is JVM
-    "pip_join_customers": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"CartesianProduct"]),
+    # the point encode (with_s2_cell) and the ray-cast refine are both JVM
+    "pip_join_customers": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"CartesianProduct", r"ArrowEvalPython"]),
     "tile_assign_customers": ([r"HashAggregate", r"ReadSchema: struct<c_custkey:bigint>", r"partial_count"], [r"ArrowEvalPython", r"CartesianProduct"]),
     "inventory_matrix": ([r"HashAggregate"], [r"ArrowEvalPython", r"CartesianProduct"]),
     "skew_salted_join": ([r"BroadcastHashJoin"], []),
